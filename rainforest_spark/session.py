@@ -24,7 +24,15 @@ WARNING_RAM_MB = 512
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Task slots for ``local[N]``: ``$SPARK_GRAFT_CPUS`` when set, else
+    the cores this process may run on (its CPU affinity where the
+    platform reports one)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def get_spark(app_name: str = "rainforest-spark",

@@ -10,8 +10,13 @@ that survives 100 TB (no read-modify-write of the whole table).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: Read errors that mean "no table at this path yet": no directory, or
+#: a directory without data files.
+_NO_TABLE_YET = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
 
 
 def write_query_result(df: DataFrame, output_file: str) -> None:
@@ -38,17 +43,26 @@ def upsert_daily_partition(spark: SparkSession, new_rows: DataFrame, path: str,
     partitions, dropDuplicates on the key, dynamic-overwrite those
     partitions.  At scale this touches |incoming days| partitions, never
     the whole table.
+
+    Only a table that does not exist yet is created from ``new_rows``
+    alone; any other error (e.g. a revision whose schema does not merge
+    with the stored one) propagates and leaves the stored days intact.
+    Dynamic overwrite is a per-write option, so the caller's session
+    conf is never changed.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         existing = spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() not in _NO_TABLE_YET:
+            raise
+        merged = new_rows
+    else:
         days = [r[0] for r in new_rows.select(partition_col).distinct().collect()]
         old = existing.filter(existing[partition_col].isin(days))
         merged = old.unionByName(new_rows, allowMissingColumns=True)
-    except Exception:
-        merged = new_rows
     (merged.dropDuplicates(key_cols)
-     .write.mode("overwrite").partitionBy(partition_col).parquet(path))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(partition_col).parquet(path))
 
 
 def anti_join_append(existing: DataFrame, new_rows: DataFrame,
@@ -86,15 +100,14 @@ def compact_partitions(spark: SparkSession, path: str,
                        partitions: list | None = None) -> dict:
     """Small-file compaction for a partitioned parquet table — the
     maintenance pass every long-lived upsert store needs
-    (:func:`upsert_daily_partition` and :func:`~rainforest_spark.
-    operators.similarity.ivf_append` both accumulate one file set per
-    write; at 100 TB a year of 5-min upserts is millions of KB-files
-    whose open/footer cost dominates scans).
+    (:func:`upsert_daily_partition` accumulates one file set per write;
+    at 100 TB a year of 5-min upserts is millions of KB-files whose
+    open/footer cost dominates scans).
 
     Per partition: if it holds ≥ ``min_files`` data files, rewrite it
     as ``ceil(bytes / target_file_mb)`` files via a dynamic partition
-    overwrite — only rewritten partitions are touched, readers of
-    other partitions are unaffected (same guarantee as the upsert).
+    overwrite (a per-write option, like the upsert's) — only rewritten
+    partitions are touched, readers of other partitions are unaffected.
     ``partitions`` limits the sweep (e.g. yesterday only, after the
     daily ingest); default sweeps every partition that needs it.
 
@@ -117,13 +130,12 @@ def compact_partitions(spark: SparkSession, path: str,
             todo[val] = (len(files), sum(os.path.getsize(f) for f in files))
     if not todo:
         return {}
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     table = spark.read.parquet(path)
     for val, (n, nbytes) in todo.items():
         n_out = max(1, math.ceil(nbytes / (target_file_mb * 2**20)))
         part = table.filter(
             F.col(partition_col).cast("string") == val)
         (part.repartition(n_out)
-         .write.mode("overwrite").partitionBy(partition_col)
-         .parquet(path))
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy(partition_col).parquet(path))
     return {val: n for val, (n, _) in todo.items()}

@@ -167,62 +167,6 @@ _PRIORITY = [
     "q203_ann_recall", "q204_latency_bands_sketch",
 ]
 
-#: The ROUND-13 window this one replaced, kept for the rotation record:
-_PRIORITY_R13 = [
-    # =================== ROUND-13 GATE WINDOW (50) ==================
-    # Composition (VERDICT r12 "Next round" #1): the 2 r12 late
-    # additions with NO driver row ever first — q208 (the scalable-
-    # Bloom slab-1 modulus/extra-hash math) and q209 (the J12
-    # nearest-gate ray fill; J12 moves test→pass on its first green
-    # row — the last §2 family whose oracle lacked driver evidence);
-    # then the 9 r8-vintage rows deferred by the round-12 window;
-    # then 39 of the 50 r9-vintage rows.  The 11 r9 rows deferred to
-    # round 14 are the trivial scalar/window entries whose expression
-    # trees are hash-verified transitively (the r7 precedent), each
-    # with an in-window or fresher family sibling:
-    # q20_dense_rank (ranking-window family q157, r12),
-    # q23_mode + q37_group_first (argmax/first-by-order family q39,
-    # in-window), q25_lead_fill (lead/lag fill family q35, in-window;
-    # q167, r12), q29_string_funcs + q30_datetime_funcs +
-    # q32_json_extract (trivial scalar functions, demoted on the same
-    # grounds in r7; exercised transitively via q127/q159/q158/q169,
-    # all r12), q41_token_count (token-count family q117 r11,
-    # q108 r12), q42_quality_score (quality family q109/q102/q120,
-    # r11; q132 in-window), q43_lang_id (scored-text family q120,
-    # r11), q44_ngram_jaccard (n-gram band family q144, in-window).
-    # All 11 stay exact-parity-gated via tests/test_oracle_parity.py;
-    # tests/test_gate_rotation forbids silent debt.  A green round
-    # leaves NO driver row older than r9 and the rotation queue EMPTY
-    # (every registered query driver-checked at least once).
-    #
-    # --- never driver-checked (2, the r12 late additions) ---
-    "q208_bloom_slab_membership", "q209_ray_gap_fill",
-    # --- stale re-checks: latest green row r8 (all 9 remaining) ---
-    "q53_bucketed_prepare", "q111_audio_fingerprint",
-    "q112_interleave", "q116_length_batches",
-    "q121_stratified_sample", "q132_relative_quality",
-    "q133_hybrid_rrf", "q141_rollup_report", "q144_fuzzy_match",
-    # --- stale re-checks: latest green row r9 (39 of 50) ---
-    "q01_pricing_summary", "q07_wet_hour_filter",
-    "q09_broadcast_dim_join", "q10_semi_align", "q11_anti_join",
-    "q12_asof_join", "q13_latest_per_hour", "q16_db_logmean",
-    "q17_temporal_multiagg", "q18_weighted_vertical",
-    "q22_sessionization", "q24_transfer_function",
-    "q26_sliding_disagg", "q27_weighted_quantile",
-    "q31_dn_discretization", "q33_perfscores",
-    "q35_hourly_interpolation", "q39_argmax_linked_agg",
-    "q40_fingerprint_dedup", "q46_simhash", "q47_ann_lsh_topk",
-    "q48_energy_distance", "q49_multimodal_decode",
-    "q52_grid_composite", "q54_embedding_neardup",
-    "q62_vpr_correction", "q63_minhash_verified_neardup",
-    "q64_bpe_token_count", "q68_neardup_clusters",
-    "q187_calibration_curve", "q188_cohens_kappa",
-    "q189_cumulative_gains", "q190_mutual_information",
-    "q191_embedding_covariance", "q192_lsh_calibration",
-    "q193_readability", "q194_hll_cardinality",
-    "q195_bloom_membership", "q196_cms_heavy_hitters",
-]
-
 #: Registered queries with no driver row yet that do NOT fit the
 #: current window — every entry here must be consumed by a future
 #: rotation (tests/test_gate_rotation.py enforces that a new query is
@@ -231,285 +175,6 @@ _QUEUED_FOR_ROTATION: list[str] = [
     # Empty as of round 13: q208/q209 rotated into the window above.
     # Any NEW oracle-paired query that lands after the window is
     # frozen goes here (the r12 pattern) and rotates next round.
-]
-
-#: The ROUND-12 window this one replaced, kept for the rotation record:
-_PRIORITY_R12 = [
-    # --- never driver-checked (1, new in r12) ---
-    "q207_station_gates_lut",
-    # --- stale re-checks: latest green row r7 (all 8 remaining) ---
-    "q150_session_paths", "q151_rolling_active",
-    "q152_survival_curve", "q153_fd_violations",
-    "q154_integrity_audit", "q155_benford_profile",
-    "q156_market_basket", "q157_percentile_rank",
-    # --- stale re-checks: latest green row r8 (41 of 50) ---
-    "q108_zipf_fit", "q110_weighted_sample", "q119_source_overlap",
-    "q122_label_cohesion", "q123_containment_pairs",
-    "q124_embedding_novelty", "q126_perplexity_buckets",
-    "q127_bm25_topk", "q131_temperature_mixture",
-    "q134_paragraph_dedup", "q139_interval_join",
-    "q143_scd2_intervals", "q158_cadence_gaps", "q159_inverted_index",
-    "q160_spearman_corr", "q161_auc_contrast", "q162_ks_statistic",
-    "q163_ab_contrast", "q164_rfm_segments", "q165_attribution",
-    "q166_triangle_census", "q167_lead_lag", "q168_psi_drift",
-    "q169_ohlc_bars", "q170_quantile_normalize", "q171_nearest_site",
-    "q172_component_census", "q173_zorder_cells",
-    "q174_seasonal_anomaly", "q175_linear_attribution",
-    "q176_seasonal_naive_error", "q177_latency_bands",
-    "q178_pareto_frontier", "q179_jackknife_mean",
-    "q180_item_similarity", "q181_concordance", "q182_brand_frontier",
-    "q183_cuped_contrast", "q184_wilson_ci", "q185_density_clusters",
-    "q186_entropy_profile",
-]
-
-#: The ROUND-11 window before that, kept for the rotation record:
-_PRIORITY_R11 = [
-    # --- never driver-checked (2, new in r11) ---
-    "q205_outlier_tile", "q206_kmv_novelty_report",
-    # --- stale re-checks: latest green row r6 (all 26 remaining) ---
-    "q82_domain_cap", "q83_unigram_logprob", "q84_epoch_shard",
-    "q85_jl_projection", "q86_pii_redaction", "q87_embedding_dedup",
-    "q88_corpus_stats", "q89_packed_tapes", "q90_hard_negatives",
-    "q91_pmi_bigrams", "q92_repeated_spans",
-    "q93_semantic_decontamination", "q94_vocab_coverage",
-    "q95_span_excision", "q96_dsir_weights", "q97_incremental_dedup",
-    "q98_domain_terms", "q99_corpus_drift", "q100_novelty_score",
-    "q101_leakage_free_split", "q102_boilerplate_removal",
-    "q103_cluster_canonical", "q104_margin_alignment",
-    "q105_token_budget", "q106_bigram_logprob", "q107_kmeans_clusters",
-    # --- stale re-checks: latest green row r7 (22 oldest of 30) ---
-    "q109_heaps_fit", "q113_dedup_rebalance", "q114_corpus_diff",
-    "q115_duplication_profile", "q117_tokenizer_fertility",
-    "q118_masking_plan", "q120_source_scorecard",
-    "q125_scatter_density", "q128_length_histogram",
-    "q129_source_concentration", "q130_type_token_ratio",
-    "q135_funnel", "q136_retention_cohorts",
-    "q137_transition_matrix", "q138_conversion_latency",
-    "q140_rolling_zscore", "q142_textrank_keywords",
-    "q145_time_weighted_mean", "q146_dyadic_ewma",
-    "q147_cusum_changepoints", "q148_winsorized_stats",
-    "q149_mad_profile",
-]
-
-#: The ROUND-10 window before that, kept for the rotation record:
-_PRIORITY_R10 = [
-    # --- never driver-checked (8) ---
-    "q197_quantile_sketch", "q198_kmv_cardinality",
-    "q199_kmv_token_overlap", "q200_kmv_overlap_matrix",
-    "q201_kmv_added_vocab", "q202_kmv_weighted_volume",
-    "q203_ann_recall", "q204_latency_bands_sketch",
-    # --- stale re-checks: latest green row r5 (all 18 remaining) ---
-    "q19_hourly_complete", "q21_contingency",
-    "q36_local_supplier_revenue", "q38_left_join_nulls",
-    "q50_cosine_topk", "q51_centroid_classify",
-    "q55_bucketed_perfscores", "q56_polar_grid_sql", "q58_polar_masks",
-    "q59_simhash_neardup", "q60_rollup_subtotals",
-    "q65_status_noise_mask", "q69_tfidf_top_terms",
-    "q70_multimodal_resize", "q71_png_rgb_decode", "q72_jpeg_decode",
-    "q73_wav_decode", "q74_frame_sample",
-    # --- stale re-checks: latest green row r6 (24 of 50) ---
-    "q02_time_range_projection", "q03_sentinel_to_null",
-    "q04_threshold_clamp", "q05_dedup_distinct",
-    "q06_consistency_filter", "q08_segment_exclusion",
-    "q14_nearest_centroid", "q15_table_summary", "q28_set_ops",
-    "q34_scatter_score", "q45_minhash_lsh", "q53_prepare_input",
-    "q54_auto_embedding_neardup", "q57_ivf_ann_topk",
-    "q61_zphi_attenuation", "q66_qpe_evaluation",
-    "q67_hzt_fallback_chain", "q75_sequence_packing",
-    "q76_deterministic_split", "q77_quantized_cosine_topk",
-    "q78_document_chunking", "q79_quality_signals",
-    "q80_decontamination", "q81_domain_mixture",
-]
-
-#: The ROUND-9 window, kept for the rotation record:
-_PRIORITY_R9 = [
-    # =================== ROUND-9 GATE WINDOW (50) ===================
-    # Composition: the 10 queries with NO driver CORRECTNESS row ever
-    # (the round-8 sketch/calibration family — VERDICT r8 "Next round"
-    # #1) first; a green round closes the rotation invariant: every
-    # registered query driver-verified at least once (198/198
-    # cross-round union).  Then the 40 STALEST re-checks — the driver
-    # regenerates testdata between rounds, so old green rows decay as
-    # evidence: all 10 r2-vintage rows, all 6 r4-vintage rows, and 24
-    # family representatives from the 42 r5-vintage rows (flagship
-    # pricing, broadcast/as-of/latest-run joins, db-logmean,
-    # temporal/vertical/sessionized aggs, disagg + weighted quantile
-    # windows, DN codec, perfscores + energy distance, interpolation,
-    # argmax, exact/simhash/minhash-verified/cluster dedup, LSH ANN,
-    # multimodal decode, grid composite, VPR correction, embedding
-    # near-dup).  Every query outside the window stays exact-parity-
-    # gated via tests/test_oracle_parity.py, and
-    # tests/test_gate_rotation.py now FAILS if a registered query is
-    # neither driver-checked, in-window, nor explicitly queued.
-    #
-    # --- never driver-checked (10) ---
-    "q187_calibration_curve", "q188_cohens_kappa",
-    "q189_cumulative_gains", "q190_mutual_information",
-    "q191_embedding_covariance", "q192_lsh_calibration",
-    "q193_readability", "q194_hll_cardinality",
-    "q195_bloom_membership", "q196_cms_heavy_hitters",
-    # --- stale re-checks: latest green row r2 (10) ---
-    "q07_wet_hour_filter", "q10_semi_align", "q11_anti_join",
-    "q20_dense_rank", "q23_mode", "q25_lead_fill", "q29_string_funcs",
-    "q30_datetime_funcs", "q32_json_extract", "q64_bpe_token_count",
-    # --- stale re-checks: latest green row r4 (6) ---
-    "q24_transfer_function", "q37_group_first", "q41_token_count",
-    "q42_quality_score", "q43_lang_id", "q44_ngram_jaccard",
-    # --- stale re-checks: latest green row r5 (24 of 42, family
-    # representatives; the other 18 stay pytest-parity-gated with
-    # in-window siblings: q21→q33/q48 scores, q36/q38→q09/q12 joins,
-    # q50/q51→q54/q47 similarity, q55→q33, q56/q58/q65→q52/q62 radar,
-    # q59→q46, q60→q141's r8 row, q69→q41/q83 text, q70-q74→q49
-    # codecs) ---
-    "q01_pricing_summary", "q09_broadcast_dim_join", "q12_asof_join",
-    "q13_latest_per_hour", "q16_db_logmean", "q17_temporal_multiagg",
-    "q18_weighted_vertical", "q22_sessionization", "q26_sliding_disagg",
-    "q27_weighted_quantile", "q31_dn_discretization", "q33_perfscores",
-    "q35_hourly_interpolation", "q39_argmax_linked_agg",
-    "q40_fingerprint_dedup", "q46_simhash", "q47_ann_lsh_topk",
-    "q48_energy_distance", "q49_multimodal_decode", "q52_grid_composite",
-    "q54_embedding_neardup", "q62_vpr_correction",
-    "q63_minhash_verified_neardup", "q68_neardup_clusters",
-]
-
-#: The ROUND-8 window before that, kept for the rotation record:
-_PRIORITY_R8 = [
-    # =================== ROUND-8 GATE WINDOW (50) ===================
-    # Composition: the 30 queries with NO driver CORRECTNESS row ever
-    # (q141 + q158-q186 — the round-7 analytics family; VERDICT r7
-    # "Next round" #1) first, then 20 r7-green keepers chosen so every
-    # demoted operator family keeps a hash-gated representative AND the
-    # round-8 ranged_cumsum rewrite's consumers stay in-window (q108,
-    # q110, q112, q116, q126, q132 + incoming q160/q164/q170/q178).
-    # Every demoted query stays exact-parity-gated via
-    # tests/test_oracle_parity.py (the full local replica of the
-    # driver gate; 188/188 green).
-    #
-    # --- never driver-checked (30) ---
-    "q141_rollup_report", "q158_cadence_gaps", "q159_inverted_index",
-    "q160_spearman_corr", "q161_auc_contrast", "q162_ks_statistic",
-    "q163_ab_contrast", "q164_rfm_segments", "q165_attribution",
-    "q166_triangle_census", "q167_lead_lag", "q168_psi_drift",
-    "q169_ohlc_bars", "q170_quantile_normalize", "q171_nearest_site",
-    "q172_component_census", "q173_zorder_cells", "q174_seasonal_anomaly",
-    "q175_linear_attribution", "q176_seasonal_naive_error",
-    "q177_latency_bands", "q178_pareto_frontier", "q179_jackknife_mean",
-    "q180_item_similarity", "q181_concordance", "q182_brand_frontier",
-    "q183_cuped_contrast", "q184_wilson_ci", "q185_density_clusters",
-    "q186_entropy_profile",
-    # --- keepers (20, all r7-green): bucketed radar path, ranged-rank
-    # + OLS, sampling, multimodal codec, ordered interleave, packing,
-    # contamination matrix, stratified mixture, embedding cohesion /
-    # containment / novelty, grouped ranked quality + perplexity,
-    # BM25 + RRF retrieval, temperature quotas, paragraph dedup,
-    # interval join, SCD-2, blocked fuzzy match ---
-    "q53_bucketed_prepare", "q108_zipf_fit", "q110_weighted_sample",
-    "q111_audio_fingerprint", "q112_interleave", "q116_length_batches",
-    "q119_source_overlap", "q121_stratified_sample",
-    "q122_label_cohesion", "q123_containment_pairs",
-    "q124_embedding_novelty", "q126_perplexity_buckets", "q127_bm25_topk",
-    "q131_temperature_mixture", "q132_relative_quality", "q133_hybrid_rrf",
-    "q134_paragraph_dedup", "q139_interval_join", "q143_scd2_intervals",
-    "q144_fuzzy_match",
-    # Round-8 additions past the window (q187 calibration curve, q188
-    # Cohen's kappa, q189 cumulative gains, q190 mutual information)
-    # are exact-parity-gated via tests/test_oracle_parity.py and
-    # vanilla-probed at sf0.001/0.01/0.1; they queue for a future
-    # window rotation.
-]
-
-#: The ROUND-7 window this one replaced, kept for the rotation record:
-_PRIORITY_R7 = [
-    # =================== ROUND-7 GATE WINDOW (50) ===================
-    # Composition: 12 never-driver-checked entries first, then 12
-    # stale re-checks (latest green row r2-r4 — the driver regenerates
-    # testdata between rounds, so old green rows decay as evidence),
-    # then 26 in-window keepers chosen so every operator family whose
-    # other members were demoted keeps at least one hash-gated
-    # representative.  ALL demoted queries stay exact-parity-gated via
-    # tests/test_oracle_parity.py (the full 120-query local replica of
-    # the driver gate).
-    #
-    # --- never driver-checked: round-6 additions + the bucketed
-    # physical-design variant (driver-hash-proving the Exchange-free
-    # prepare_input path content-identical, VERDICT r6 #7) ---
-    "q108_zipf_fit", "q109_heaps_fit", "q110_weighted_sample",
-    "q111_audio_fingerprint", "q112_interleave",
-    "q113_dedup_rebalance", "q114_corpus_diff",
-    "q115_duplication_profile", "q116_length_batches",
-    "q117_tokenizer_fertility", "q118_masking_plan",
-    "q53_bucketed_prepare",
-    # --- stale re-checks (oldest-first; green r2-r4).  Six of the
-    # original twelve (q42, q29, q30, q32, q20, q23 — trivial scalar/
-    # window entries, and q42's feature expressions are now hash-
-    # verified transitively through in-window q132) were demoted for
-    # the six late-round-7 additions below; all six stay pytest-
-    # parity-gated ---
-    # (the remaining r2-r4 stale re-checks — q44, q13, q24, q25 — and
-    # the r6-green q14 were demoted for the five new operators below;
-    # all five stay pytest-parity-gated, and their families keep
-    # in-window representatives: dedup via q45/q97/q123, the radar
-    # chain via q53/q61/q66, ranking via q34)
-    # --- late round-7 additions (never driver-checked): corpus
-    # distribution diagnostics + temperature quotas + per-source
-    # relative quality + hybrid RRF retrieval ---
-    "q128_length_histogram", "q129_source_concentration",
-    "q130_type_token_ratio", "q131_temperature_mixture",
-    "q132_relative_quality", "q133_hybrid_rrf",
-    # --- round-7 continued: MassiveText paragraph-level dedup with
-    # reassembly (admitted by demoting q84_epoch_shard, r6-green — the
-    # packing family keeps q89/q101/q116 in-window), the single-shuffle
-    # conversion funnel and the cohort-retention rollup over events
-    # (admitted by demoting q86_pii_redaction and
-    # q67_hzt_fallback_chain, both r6-green and pytest-parity-gated;
-    # the radar chain keeps q53/q61/q66 + q14/q34 in-window) ---
-    "q134_paragraph_dedup", "q135_funnel", "q136_retention_cohorts",
-    # --- round-7 continued: event-transition matrix + conversion-
-    # latency quantiles (admitted by demoting the stale re-checks
-    # q41_token_count and q43_lang_id — their expression trees are
-    # hash-verified transitively through in-window q117/q132/q120,
-    # and both stay pytest-parity-gated) ---
-    "q137_transition_matrix", "q138_conversion_latency",
-    # --- round-7 continued: keyless point-in-interval join (time-
-    # bucket expansion), pure-integer rolling z-score anomaly gate,
-    # hierarchical ROLLUP report, exact-integer TextRank keyword
-    # PageRank, SCD-2 validity intervals ---
-    "q139_interval_join", "q140_rolling_zscore",
-    "q142_textrank_keywords", "q143_scd2_intervals",
-    # --- round-7 embedding / retrieval / corpus-health additions
-    # (never driver-checked) ---
-    "q124_embedding_novelty", "q126_perplexity_buckets",
-    "q127_bm25_topk", "q123_containment_pairs",
-    "q119_source_overlap", "q120_source_scorecard",
-    "q121_stratified_sample", "q122_label_cohesion",
-    "q125_scatter_density",
-    # --- round-7 continued-4 (never driver-checked): blocked fuzzy
-    # entity matching, exact TWAP, dyadic EWMA, CUSUM drift, winsorized
-    # stats, MAD profile, session paths, rolling actives, Kaplan-Meier
-    # survival, and the data-quality family (FD audit, referential
-    # integrity, Benford) ---
-    "q144_fuzzy_match", "q145_time_weighted_mean", "q146_dyadic_ewma",
-    "q147_cusum_changepoints", "q148_winsorized_stats",
-    "q149_mad_profile", "q150_session_paths", "q151_rolling_active",
-    "q152_survival_curve", "q153_fd_violations", "q154_integrity_audit",
-    "q155_benford_profile", "q156_market_basket", "q157_percentile_rank",
-    # 80 registered queries lack ANY driver CORRECTNESS row but only
-    # 50 fit; this window carries the 50 above.  Left for the round-8
-    # rotation: q141_rollup_report (its ROLLUP machinery is driver-
-    # verified via q60), q158/q159 (cadence gaps, inverted index),
-    # the stats family q160-q165 (Spearman, AUC, KS, A/B chi-square,
-    # RFM, attribution), q166/q167 (triangle census, lead-lag),
-    # q168-q171 (PSI, OHLC, quantile normalize, nearest-site),
-    # q172-q174 (component census, z-order cells, seasonal gate),
-    # q175-q177 (linear attribution, naive forecast, bands),
-    # q178/q179 (pareto frontier, jackknife), q180/q181 (item
-    # similarity, concordance), q182 (brand frontier), q183 (CUPED)
-    # q184 (Wilson intervals), q185 (density clusters) and q186
-    # (entropy profile) — all
-    # exact-parity-gated via tests/test_oracle_parity.py.  The
-    # r6-green keepers rotated out (q54_auto, q87, q89, q95, q97,
-    # q101, q102, q106, q53_prepare_input, q61, q66, q34, q45) also
-    # stay pytest-gated and keep their bench-tier datapoints.
 ]
 
 
