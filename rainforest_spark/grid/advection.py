@@ -15,8 +15,9 @@ Motion estimation is inherently a whole-frame operation, so a single
 pair runs on one dense 640×710 map (~1.2 MB).  The scale axis is TIME:
 ``advect_blend_series`` distributes the whole series as one
 applyInPandas per consecutive frame pair (rows shuffle once on the pair
-key), keeping the same numpy kernel executor-side; the bare functions
-remain the driver-boundary path for a single RT cycle.
+key), keeping the same numpy kernel executor-side.  A real-time
+micro-batch holds a few frames on the driver, where
+``advect_blend_frames`` runs the same kernel pair by pair.
 """
 
 from __future__ import annotations
@@ -100,6 +101,33 @@ def advection_blend(prev: np.ndarray, cur: np.ndarray,
     blended = np.where(np.isnan(moved), cur,
                        alpha * cur + (1 - alpha) * moved)
     return blended
+
+
+def advect_blend_frames(series, value_col: str = "rain_rate",
+                        nx: int = 710, ny: int = 640, alpha: float = 0.5,
+                        max_shift: int = 10) -> np.ndarray:
+    """numpy twin of ``advect_blend_series`` for a driver-side pandas
+    series: each frame blends against the previous frame of the series
+    in TIMESTAMP order, one dense pair at a time.  Returns the blended
+    value per row of ``series``, NaN where the frame has no predecessor
+    or the blend is NaN (the rows ``advect_blend_series`` does not
+    emit)."""
+    ts = series["TIMESTAMP"].to_numpy()
+    xs = series["x_idx"].to_numpy()
+    ys = series["y_idx"].to_numpy()
+    v = series[value_col].to_numpy(np.float64)
+    out = np.full(len(series), np.nan)
+    prev = None
+    for t in np.unique(ts):
+        rows = np.flatnonzero(ts == t)
+        cur = np.full((ny, nx), np.nan)
+        cur[ys[rows], xs[rows]] = v[rows]
+        if prev is not None:
+            blended = advection_blend(prev, cur, alpha=alpha,
+                                      max_shift=max_shift)
+            out[rows] = blended[ys[rows], xs[rows]]
+        prev = cur
+    return out
 
 
 def advect_blend_series(grids, value_col: str = "rain_rate",

@@ -119,6 +119,50 @@ def temporal_smooth(grids: DataFrame, value_col: str = "rain_rate",
     return out
 
 
+def temporal_smooth_frames(series, value_col: str = "rain_rate",
+                           proxy_col: str | None = None):
+    """numpy twin of ``temporal_smooth`` for a driver-side pandas series
+    of long (TIMESTAMP, x_idx, y_idx, ...) rows — the daemon's per-frame
+    W5/W6 step (qpe/qpe.py:680-733) without a window shuffle.
+
+    Same row semantics: a pixel's previous row is its most recent
+    earlier frame in ``series`` (a frame it is missing from is skipped,
+    a null value still counts as the row); the two-row mean ignores
+    nulls like ``avg``; ``disag_ratio`` is null unless the proxy mean
+    is > 0.  Returns a copy of ``series`` with the same added columns
+    (nulls as NaN)."""
+    import numpy as np
+
+    out = series.reset_index(drop=True)
+    # per-pixel time order, as the window's partitionBy/orderBy
+    order = np.lexsort((out["TIMESTAMP"].to_numpy(),
+                        out["y_idx"].to_numpy(), out["x_idx"].to_numpy()))
+    xs = out["x_idx"].to_numpy()[order]
+    ys = out["y_idx"].to_numpy()[order]
+    same_pixel = (xs[1:] == xs[:-1]) & (ys[1:] == ys[:-1])
+
+    def mean2(col):
+        v = out[col].to_numpy(np.float64)
+        prev_sorted = np.full(len(v), np.nan)
+        prev_sorted[1:] = np.where(same_pixel, v[order][:-1], np.nan)
+        prev = np.empty_like(v)
+        prev[order] = prev_sorted
+        n = (~np.isnan(prev)).astype(np.float64) + ~np.isnan(v)
+        with np.errstate(invalid="ignore"):
+            return (np.nan_to_num(prev) + np.nan_to_num(v)) / n
+
+    out[f"{value_col}_2frame"] = mean2(value_col)
+    if proxy_col:
+        m = mean2(proxy_col)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            ratio = np.where(m > 0, out[proxy_col].to_numpy(np.float64) / m,
+                             np.nan)
+        out["disag_ratio"] = ratio
+        out[value_col + "_disag"] = (out[f"{value_col}_2frame"].to_numpy()
+                                     * np.where(np.isnan(ratio), 1.0, ratio))
+    return out
+
+
 def grid_to_matrix(grid_df, value_col: str, nx: int = 710, ny: int = 640):
     """Collect one timestep's sparse pixel rows into a dense numpy grid —
     the ODIM/GIF sink boundary (driver-side by design, like the

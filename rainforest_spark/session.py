@@ -35,6 +35,24 @@ def default_parallelism() -> int:
     return os.cpu_count() or 1
 
 
+#: Ceiling of the default driver heap (what a big box gets).
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """Driver heap for ``local[N]``: ``$SPARK_GRAFT_DRIVER_MEM`` when
+    set, else half the machine's physical memory (MemTotal), capped at
+    24g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(total // 2**21, MAX_DRIVER_MEM_MB)}m"
+
+
 def get_spark(app_name: str = "rainforest-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -59,10 +77,11 @@ def get_spark(app_name: str = "rainforest-spark",
         .config("spark.sql.parquet.filterPushdown", "true")
         # local[N] runs ALL executor work inside the driver JVM — size
         # the heap for the box (the round-6 sf10 bench OOMed a
-        # broadcast build at 8g with 125 GB sitting free).  On a real
-        # cluster spark-submit supplies executor/driver memory and
-        # this default is irrelevant.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # broadcast build at 8g with 125 GB sitting free; a 24g heap
+        # on a 16 GB box lets the JVM grow until the host kills it).
+        # On a real cluster spark-submit supplies executor/driver
+        # memory and this default is irrelevant.
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Spark 4.1 writes a companion ".checksum" file for EVERY
         # checkpoint file (offsets, commits, state deltas, sink

@@ -5,19 +5,24 @@ The reference implements real time as a polling daemon
 5-min scan files, recompute a map per cycle, persist prev-frame state to
 .npy between restarts.  The Structured Streaming mapping (SURVEY §2.9):
 
-| reference                          | here                              |
-|------------------------------------|-----------------------------------|
-| directory polling (T1)             | file-stream source                |
-| 5-min cycle (T2)                   | processingTime/availableNow trigger|
-| 10-min gauge pairing (T3)          | window(ts, '10 minutes') agg      |
-| prev-frame state on disk (T4)      | checkpointed streaming state      |
-| missing radars → quality (T5)      | per-window observed-radar codes   |
-| hourly HZT reuse (T6)              | stream-static join                |
-| file-per-timestamp sink (T7)       | idempotent foreachBatch           |
+| reference                     | here                                     |
+|-------------------------------|------------------------------------------|
+| directory polling (T1)        | file-stream source                       |
+| 5-min cycle (T2)              | processingTime/availableNow trigger      |
+| 10-min gauge pairing (T3)     | window(ts, '10 minutes') agg             |
+| prev-frame state on disk (T4) | frames store: TIMESTAMP partitions, one  |
+|                               | pruned read of the neighbour frames      |
+| missing radars → quality (T5) | per-window observed-radar codes          |
+| hourly HZT reuse (T6)         | stream-static join                       |
+| file-per-timestamp sink (T7)  | foreachBatch: one composite collect,     |
+|                               | numpy per frame, two idempotent          |
+|                               | partitioned writes (frames, post)        |
 
-The streaming query reuses the SAME batch operators (grid/qpe.py) inside
-foreachBatch — one code path for batch and RT, which is the point of
-re-expressing the daemon on Spark.
+The streaming query builds its composite with the SAME batch operators
+(grid/qpe.py) inside foreachBatch — one code path for batch and RT,
+which is the point of re-expressing the daemon on Spark; the per-frame
+post-processing runs the numpy twins of the batch operators on the
+driver, as the daemon does.
 """
 
 from __future__ import annotations
@@ -103,14 +108,23 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
         composite → rain rate → two-frame mean + disaggregation ratio
         → advection blend against the PREVIOUS frame
 
-    Prev-frame state is the frames store — each micro-batch writes its
-    composite frames as TIMESTAMP partitions (dynamic overwrite →
-    idempotent on retry, T7) and reads back only the predecessor
-    partitions it needs (partition pruning: state reads stay O(batch),
+    Each micro-batch builds its composite with the SAME batch operators
+    (grid/qpe polar_to_grid → vertical_composite → rain_rate), so batch
+    and stream share the composite code, and collects it ONCE; an empty
+    collect is an empty batch.  Then, like the daemon, it post-processes
+    whole frames with numpy on the driver in TIMESTAMP order
+    (grid/qpe.temporal_smooth_frames, grid/advection.
+    advect_blend_frames — the numpy twins of temporal_smooth and
+    advect_blend_series, which stay the batch path and the arbiter).
+    Two partitioned writes follow: the composite frames, then the post
+    partitions, both dynamic overwrites → idempotent on retry (T7).
+
+    Prev-frame state is the frames store: each micro-batch writes its
+    frames as TIMESTAMP partitions and reads back, in one pruned read,
+    only the neighbour partitions it needs (state reads stay O(batch),
     never O(history)) — the Spark analogue of the daemon persisting
-    prev.npy between cycles.  Inside foreachBatch the SAME batch
-    operators run (grid/qpe.temporal_smooth, grid/advection.
-    advect_blend_series), so streaming and batch stay one code path.
+    prev.npy between cycles.  A store that cannot be read fails the
+    batch rather than leaving null blends.
 
     Pairing note: predecessors are by fixed cadence (``cycle_sec``, the
     daemon's 5-min cycle).  Batch ``temporal_smooth`` pairs by row
@@ -122,71 +136,64 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
     delivery converges to the batch result instead of leaving a
     permanently null blend.
     """
-    from rainforest_spark.grid.advection import advect_blend_series
+    import pandas as pd
+
+    from rainforest_spark.grid.advection import advect_blend_frames
     from rainforest_spark.grid.qpe import (
-        polar_to_grid, rain_rate, temporal_smooth, vertical_composite,
+        polar_to_grid, rain_rate, temporal_smooth_frames, vertical_composite,
     )
 
+    # materialised once: each micro-batch's broadcast build of the LUT
+    # then reads memory instead of re-running the LUT's own plan (a
+    # pandas-built 144k-row LUT cost ~0.5 s per micro-batch, 4 cores)
+    lut = lut.localCheckpoint()
     stream = polar_file_stream(spark, source_path, schema)
     frames_dir = f"{sink_dir}/frames"
     post_dir = f"{sink_dir}/post"
-    frame_cols = ["TIMESTAMP", "x_idx", "y_idx", "zh_lin", "w_total",
-                  "rain_rate"]
+    frame_schema = ("TIMESTAMP long, x_idx int, y_idx int, zh_lin double, "
+                    "w_total double, rain_rate double")
+    post_schema = (frame_schema + ", rain_rate_2frame double, "
+                   "disag_ratio double, rain_rate_disag double, "
+                   "rain_rate_advected double")
+
+    def names(ddl):
+        return [c.split()[0] for c in ddl.split(", ")]
+
+    frame_cols = names(frame_schema)
+
+    def write(bs, pdf, ddl, path):
+        # pandas → Arrow matches columns by position; a dynamic
+        # overwrite replaces only this batch's TIMESTAMP partitions (a
+        # static one would replace the whole store)
+        (bs.createDataFrame(pdf[names(ddl)], ddl).write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("TIMESTAMP").parquet(path))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # everything runs on the MICRO-BATCH session: its conf clone is
-        # isolated, so the dynamic-overwrite setting cannot leak into
-        # other code on the main session — and, crucially, the frame
-        # writes (which derive from batch_df and therefore execute
-        # under this session) actually see it.  Setting it on the outer
-        # session instead silently leaves the clone on 'static', and a
-        # static overwrite REPLACES THE WHOLE frames store with the
-        # current batch (observed: a late frame nuked every other
-        # frame partition).
         bs = batch_df.sparkSession
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode",
-                    "dynamic")
         comp = rain_rate(vertical_composite(
             polar_to_grid(batch_df, lut, ["zh_lin"]),
-            ["zh_lin"], visib_col=None)).select(*frame_cols)
-        # bound the re-executed subtree: the composite feeds the state
-        # write, the smoother and the advection fan-out (frames are
-        # ~1 MB each, same budget as the driver-side sink boundary)
-        comp = comp.localCheckpoint()
-        ts_list = sorted(r[0] for r in
-                         comp.select("TIMESTAMP").distinct().collect())
-        (comp.write.mode("overwrite").partitionBy("TIMESTAMP")
-         .parquet(frames_dir))
-        prev_ts = [t - cycle_sec for t in ts_list if t - cycle_sec
-                   not in ts_list]
+            ["zh_lin"], visib_col=None)).select(*frame_cols).toPandas()
+        if comp.empty:
+            return
+        write(bs, comp, frame_schema, frames_dir)
+        ts_list = set(comp["TIMESTAMP"].tolist())
+        prev_ts = {t - cycle_sec for t in ts_list} - ts_list
         # late-arrival back-fill: successors already in the store must
         # re-pair against the frames arriving now
-        succ_ts = [t + cycle_sec for t in ts_list if t + cycle_sec
-                   not in ts_list]
-        try:
-            store = (bs.read.parquet(frames_dir)
-                     .filter(F.col("TIMESTAMP").isin(prev_ts + succ_ts))
-                     .select(*frame_cols).localCheckpoint())
-            succ_present = [r[0] for r in store.select("TIMESTAMP")
-                            .distinct().collect() if r[0] in succ_ts]
-        except Exception:
-            store = bs.createDataFrame([], comp.schema)
-            succ_present = []
-        out_ts = ts_list + succ_present
-        series = store.unionByName(comp)
-        smoothed = temporal_smooth(series, "rain_rate",
-                                   proxy_col="zh_lin")
-        blended = (advect_blend_series(series, "rain_rate", nx=nx, ny=ny,
-                                       alpha=alpha, max_shift=max_shift)
-                   .withColumnRenamed("rain_rate", "rain_rate_advected"))
-        out = (smoothed.join(blended,
-                             on=["TIMESTAMP", "x_idx", "y_idx"],
-                             how="left")
-               .filter(F.col("TIMESTAMP").isin(out_ts)))
-        (out.write.mode("overwrite").partitionBy("TIMESTAMP")
-         .parquet(post_dir))
+        succ_ts = {t + cycle_sec for t in ts_list} - ts_list
+        # the store exists: this batch's frames were just written to it
+        store = (bs.read.schema(frame_schema).parquet(frames_dir)
+                 .filter(F.col("TIMESTAMP").isin(sorted(prev_ts | succ_ts)))
+                 .toPandas())
+        out_ts = ts_list | (set(store["TIMESTAMP"].tolist()) & succ_ts)
+        series = temporal_smooth_frames(pd.concat([store, comp]),
+                                        "rain_rate", proxy_col="zh_lin")
+        series["rain_rate_advected"] = advect_blend_frames(
+            series, "rain_rate", nx=nx, ny=ny, alpha=alpha,
+            max_shift=max_shift)
+        write(bs, series[series["TIMESTAMP"].isin(out_ts)], post_schema,
+              post_dir)
 
     writer = (stream.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))

@@ -17,3 +17,34 @@ def test_default_parallelism_is_available_cores_when_unset(monkeypatch):
 def test_default_parallelism_honours_env(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_parallelism() == 3
+
+
+def _mem_total_mb():
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+
+
+def test_default_driver_memory_is_half_of_memtotal_when_unset(monkeypatch):
+    from rainforest_spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    want = min(_mem_total_mb() // 2, 24 * 1024)
+    assert default_driver_memory() == f"{want}m"
+
+
+def test_default_driver_memory_is_capped_at_24g(monkeypatch):
+    from rainforest_spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(os, "sysconf", lambda name: {
+        "SC_PHYS_PAGES": 256 * 2**30 // 4096, "SC_PAGE_SIZE": 4096}[name])
+    assert default_driver_memory() == "24576m"
+
+
+def test_default_driver_memory_honours_env(monkeypatch):
+    from rainforest_spark.session import default_driver_memory
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
