@@ -63,9 +63,10 @@ def get_spark(app_name: str = "rainforest-spark",
     master comes from spark-submit and everything here still applies.
     """
     cpus = default_parallelism()
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.autoBroadcastJoinThreshold", str(AUTO_BROADCAST_BYTES))
         .config("spark.sql.caseSensitive", "true")
@@ -83,20 +84,20 @@ def get_spark(app_name: str = "rainforest-spark",
         # memory and this default is irrelevant.
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
+    )
+    if master.startswith("local"):
         # Spark 4.1 writes a companion ".checksum" file for EVERY
         # checkpoint file (offsets, commits, state deltas, sink
-        # metadata) by default.  On a Hadoop LocalFileSystem/HDFS
-        # deployment the filesystem layer already checksums writes
-        # (.crc companions), so the Spark-level pass doubles the file
-        # ops per micro-batch for no added integrity.  Measured (r14,
-        # steal-guarded A/B): the 31-batch RT chain at sf1 drops
-        # 28.2 -> 19.1 s with it off; work-bound streams (s02/s05 at
-        # sf10) are unchanged.  Re-enable for object stores without
-        # native checksumming via SPARK_GRAFT_CKPT_CHECKSUM=1.
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM") == "1"
-                else "false")
-    )
+        # metadata) by default.  A local master checkpoints to the
+        # Hadoop LocalFileSystem, which already checksums writes (.crc
+        # companions), so the Spark-level pass doubles the file ops per
+        # micro-batch for no added integrity.  Measured (steal-guarded
+        # A/B): the 31-batch RT chain at sf1 drops 28.2 -> 19.1 s with
+        # it off; work-bound streams (s02/s05 at sf10) are unchanged.
+        # Any other master keeps Spark's default, since its checkpoints
+        # may sit on an object store without native checksums.
+        builder = builder.config(
+            "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -10,13 +10,13 @@ The reference implements real time as a polling daemon
 | directory polling (T1)        | file-stream source                       |
 | 5-min cycle (T2)              | processingTime/availableNow trigger      |
 | 10-min gauge pairing (T3)     | window(ts, '10 minutes') agg             |
-| prev-frame state on disk (T4) | frames store: TIMESTAMP partitions, one  |
-|                               | pruned read of the neighbour frames      |
+| prev-frame state on disk (T4) | post/ store: one pruned read of the      |
+|                               | neighbour frames                         |
 | missing radars → quality (T5) | per-window observed-radar codes          |
 | hourly HZT reuse (T6)         | stream-static join                       |
 | file-per-timestamp sink (T7)  | foreachBatch: one composite collect,     |
-|                               | numpy per frame, two idempotent          |
-|                               | partitioned writes (frames, post)        |
+|                               | numpy per frame, one idempotent          |
+|                               | partitioned write                        |
 
 The streaming query builds its composite with the SAME batch operators
 (grid/qpe.py) inside foreachBatch — one code path for batch and RT,
@@ -27,6 +27,7 @@ driver, as the daemon does.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -116,15 +117,20 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
     (grid/qpe.temporal_smooth_frames, grid/advection.
     advect_blend_frames — the numpy twins of temporal_smooth and
     advect_blend_series, which stay the batch path and the arbiter).
-    Two partitioned writes follow: the composite frames, then the post
-    partitions, both dynamic overwrites → idempotent on retry (T7).
+    One partitioned write of the post partitions follows, a dynamic
+    overwrite → idempotent on retry (T7).
 
-    Prev-frame state is the frames store: each micro-batch writes its
-    frames as TIMESTAMP partitions and reads back, in one pruned read,
-    only the neighbour partitions it needs (state reads stay O(batch),
-    never O(history)) — the Spark analogue of the daemon persisting
-    prev.npy between cycles.  A store that cannot be read fails the
-    batch rather than leaving null blends.
+    Prev-frame state is the post store itself: every post partition
+    carries its frame's composite columns, so a micro-batch reads, in
+    one pruned read of those columns, only the neighbour partitions it
+    needs (state reads stay O(batch), never O(history)) — the Spark
+    analogue of the daemon persisting prev.npy between cycles.  The
+    read never touches the batch's own timestamps, and a back-filled
+    successor is rewritten with the frame columns it already had, so a
+    retried batch recomputes the same output.  Only a store that does
+    not exist yet (PATH_NOT_FOUND, before the first write) means no
+    neighbours; any other read error fails the batch rather than
+    leaving null blends.
 
     Pairing note: predecessors are by fixed cadence (``cycle_sec``, the
     daemon's 5-min cycle).  Batch ``temporal_smooth`` pairs by row
@@ -148,7 +154,6 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
     # pandas-built 144k-row LUT cost ~0.5 s per micro-batch, 4 cores)
     lut = lut.localCheckpoint()
     stream = polar_file_stream(spark, source_path, schema)
-    frames_dir = f"{sink_dir}/frames"
     post_dir = f"{sink_dir}/post"
     frame_schema = ("TIMESTAMP long, x_idx int, y_idx int, zh_lin double, "
                     "w_total double, rain_rate double")
@@ -161,14 +166,6 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
 
     frame_cols = names(frame_schema)
 
-    def write(bs, pdf, ddl, path):
-        # pandas → Arrow matches columns by position; a dynamic
-        # overwrite replaces only this batch's TIMESTAMP partitions (a
-        # static one would replace the whole store)
-        (bs.createDataFrame(pdf[names(ddl)], ddl).write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("TIMESTAMP").parquet(path))
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bs = batch_df.sparkSession
         comp = rain_rate(vertical_composite(
@@ -176,24 +173,35 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
             ["zh_lin"], visib_col=None)).select(*frame_cols).toPandas()
         if comp.empty:
             return
-        write(bs, comp, frame_schema, frames_dir)
         ts_list = set(comp["TIMESTAMP"].tolist())
         prev_ts = {t - cycle_sec for t in ts_list} - ts_list
         # late-arrival back-fill: successors already in the store must
         # re-pair against the frames arriving now
         succ_ts = {t + cycle_sec for t in ts_list} - ts_list
-        # the store exists: this batch's frames were just written to it
-        store = (bs.read.schema(frame_schema).parquet(frames_dir)
-                 .filter(F.col("TIMESTAMP").isin(sorted(prev_ts | succ_ts)))
-                 .toPandas())
+        try:
+            store = bs.read.schema(frame_schema).parquet(post_dir)
+        except AnalysisException as exc:
+            # no store before the first write; any other error fails
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+            store = comp.iloc[:0]
+        else:
+            store = (store.filter(F.col("TIMESTAMP")
+                                  .isin(sorted(prev_ts | succ_ts)))
+                     .toPandas())
         out_ts = ts_list | (set(store["TIMESTAMP"].tolist()) & succ_ts)
         series = temporal_smooth_frames(pd.concat([store, comp]),
                                         "rain_rate", proxy_col="zh_lin")
         series["rain_rate_advected"] = advect_blend_frames(
             series, "rain_rate", nx=nx, ny=ny, alpha=alpha,
             max_shift=max_shift)
-        write(bs, series[series["TIMESTAMP"].isin(out_ts)], post_schema,
-              post_dir)
+        # pandas → Arrow matches columns by position; a dynamic
+        # overwrite replaces only this batch's TIMESTAMP partitions (a
+        # static one would replace the whole store)
+        post = series[series["TIMESTAMP"].isin(out_ts)][names(post_schema)]
+        (bs.createDataFrame(post, post_schema).write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("TIMESTAMP").parquet(post_dir))
 
     writer = (stream.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))
@@ -216,8 +224,6 @@ def session_window_aggregate(stream: DataFrame, gap: str = "30 minutes",
     """Streaming session windows: the reference sessionizes offline with
     a cumsum of gap jumps (A15); in streaming, Spark's ``session_window``
     maintains the same semantics with watermark-bounded state."""
-    from pyspark.sql import functions as F
-
     with_ts = stream.withColumn("event_time",
                                 F.col("TIMESTAMP").cast("timestamp"))
     keys = partition_cols or ["STATION"]

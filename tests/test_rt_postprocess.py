@@ -1,8 +1,8 @@
 """The RT micro-batch's driver-side post-processing and its failure
 paths: the numpy frame kernels equal the batch DataFrame operators, a
-frames store that cannot be read fails the batch, a query killed
-mid-batch restarts and converges, and the micro-batch writes leave the
-caller's session conf alone."""
+post store that cannot be read fails the batch, a query killed
+mid-batch restarts and converges, and the micro-batch write leaves the
+caller's session conf alone and the sink with the post store only."""
 
 from __future__ import annotations
 
@@ -124,7 +124,7 @@ def test_unreadable_frames_store_fails_the_batch(rt):
     q = rt["run"]()
     q.awaitTermination(180)
     assert q.exception() is None
-    with open(f"{rt['sink']}/frames/TIMESTAMP={T0}/part-corrupt.parquet",
+    with open(f"{rt['sink']}/post/TIMESTAMP={T0}/part-corrupt.parquet",
               "wb") as f:
         f.write(b"not a parquet file")
 
@@ -149,8 +149,8 @@ def test_micro_batch_leaves_session_overwrite_mode(spark, rt):
         assert spark.conf.get(MODE) == "static"
     finally:
         spark.conf.set(MODE, before)
-    # a static overwrite would have replaced each store with one frame
-    assert _partitions(f"{rt['sink']}/frames") == [T0, T0 + 300]
+    # a static overwrite would have replaced the store with one frame
+    assert not os.path.exists(f"{rt['sink']}/frames")
     assert _partitions(f"{rt['sink']}/post") == [T0, T0 + 300]
 
 
@@ -163,14 +163,14 @@ def test_rt_restart_after_failed_batch_converges_to_batch(spark, rt):
     for i in range(3):
         _scan_file(rt["src"], T0 + 300 * i, rt["rng"])
     # a plain file where the post store goes: the micro-batch fails
-    # after its frames write
+    # after its composite collect
     os.makedirs(rt["sink"])
     with open(f"{rt['sink']}/post", "w") as f:
         f.write("in the way")
     q = rt["run"]()
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(180)
-    assert _partitions(f"{rt['sink']}/frames") == [T0, T0 + 300, T0 + 600]
+    assert os.path.isfile(f"{rt['sink']}/post")
 
     os.remove(f"{rt['sink']}/post")
     q = rt["run"]()

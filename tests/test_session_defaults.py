@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from rainforest_spark.session import default_parallelism
 
 
@@ -48,3 +50,40 @@ def test_default_driver_memory_honours_env(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert default_driver_memory() == "3g"
+
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records every ``config``
+    call and returns the settings from ``getOrCreate``."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+@pytest.mark.parametrize("master, want", [("local[2]", "false"),
+                                          ("spark://h:7077", None)])
+def test_checkpoint_checksum_off_only_on_local_master(monkeypatch, master,
+                                                      want):
+    from types import SimpleNamespace
+
+    from rainforest_spark import session
+
+    monkeypatch.setattr(session, "SparkSession",
+                        SimpleNamespace(builder=_RecordingBuilder()))
+    conf = session.get_spark(master=master)
+    assert conf.get(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled") == want
