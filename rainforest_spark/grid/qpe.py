@@ -13,10 +13,21 @@ Re-expresses qpe/qpe.py:324-811 (per-timestep numpy pipeline) as:
 Scale shape: everything shuffles on (timestamp, x_idx, y_idx) — uniform
 keys, map-side partial aggregation first; the LUT join is broadcast so
 polar rows never shuffle for geometry.
+
+``compile_lut`` + ``composite_frames`` are the dense numpy twin of
+``rain_rate(vertical_composite(polar_to_grid(...)))`` for gates already
+collected into pandas, as the reference builds its composite (LUT indexing and
+scatter-add, qpe/qpe.py:324-811, common/add_at.py): one sorted-key join
+and two bincount aggregations, no intermediate relation.  The RT stream
+composites with it; the DataFrame operators stay the batch path and
+the arbiter.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -45,6 +56,10 @@ def apply_polar_masks(polar: DataFrame, snr_threshold: float = 3.0,
                            .otherwise(zlin)))
 
 
+#: gate-key columns of the LUT join, most significant first
+GATE_KEY = ["RADAR", "SWEEP", "az_idx", "rng_idx"]
+
+
 def polar_to_grid(polar: DataFrame, lut: DataFrame,
                   value_cols: list[str]) -> DataFrame:
     """J7 + A9: LUT equi-join then per-pixel mean (scatter-add ÷ count).
@@ -53,8 +68,7 @@ def polar_to_grid(polar: DataFrame, lut: DataFrame,
     ``add_at`` accumulate + divide; here ``groupBy(pixel).avg`` with
     map-side combine.
     """
-    joined = polar.join(broadcast(lut), on=["RADAR", "SWEEP", "az_idx",
-                                            "rng_idx"], how="inner")
+    joined = polar.join(broadcast(lut), on=GATE_KEY, how="inner")
     aggs = [F.avg(c).alias(c) for c in value_cols]
     aggs.append(F.count(F.lit(1)).alias("n_gates"))
     aggs.append(F.max(F.col(value_cols[0]).isNotNull().cast("int"))
@@ -65,8 +79,14 @@ def polar_to_grid(polar: DataFrame, lut: DataFrame,
     return joined.groupBy(*keys).agg(*aggs, F.avg("height").alias("height"))
 
 
+#: height weighting exponent of the vertical composite (qpe/qpe.py:613-656)
+BETA = -0.5
+#: Marshall-Palmer Z = a·R^b (constants A_QPE / B_QPE)
+A_QPE, B_QPE = 316.0, 1.5
+
+
 def vertical_composite(grid_sweeps: DataFrame, value_cols: list[str],
-                       beta: float = -0.5,
+                       beta: float = BETA,
                        visib_col: str | None = "VISIB") -> DataFrame:
     """A10: weighted vertical aggregation of sweep/radar grids per pixel.
 
@@ -88,13 +108,125 @@ def vertical_composite(grid_sweeps: DataFrame, value_cols: list[str],
 
 
 def rain_rate(composite: DataFrame, zh_lin_col: str = "zh_lin",
-              a: float = 316.0, b: float = 1.5) -> DataFrame:
+              a: float = A_QPE, b: float = B_QPE) -> DataFrame:
     """Marshall-Palmer inversion R = (Z/a)^(1/b) with the ZH validity mask
     (P13, qpe/qpe.py:569-577 + constants A_QPE/B_QPE)."""
     r = F.pow(F.col(zh_lin_col) / a, 1.0 / b)
     return composite.withColumn(
         "rain_rate", F.when(F.col(zh_lin_col).isNull(), None)
         .otherwise(F.greatest(r, F.lit(0.0))))
+
+
+class CompiledLut(NamedTuple):
+    """The LUT as sorted arrays (``compile_lut``)."""
+    radars: np.ndarray      # sorted RADAR names; a radar's code is its index
+    lo: list                # per gate-key column: smallest value
+    span: list              # per gate-key column: number of values
+    key: np.ndarray         # int64 gate keys, sorted
+    pixel: np.ndarray       # each gate's row in ``pixels``
+    pixels: np.ndarray      # distinct (x_idx, y_idx) pairs
+    height: np.ndarray      # each gate's height, float64
+
+
+def _gate_key(parts, lo, span):
+    """Mixed-radix int64 key of the gate-key columns (RADAR as code)."""
+    key = parts[0].astype(np.int64)
+    for p, lo_, sp in zip(parts[1:], lo[1:], span[1:]):
+        key = key * sp + (p - lo_)
+    return key
+
+
+def compile_lut(lut_pdf) -> CompiledLut:
+    """Compile the LUT (pandas: RADAR, SWEEP, az_idx, rng_idx, x_idx,
+    y_idx, height) once for ``composite_frames``: int64 gate keys over
+    (RADAR code, SWEEP, az_idx, rng_idx), sorted, with each gate's pixel
+    and height in the same order.  A duplicate gate key raises
+    ``ValueError`` — the join would fan that gate out."""
+    import pandas as pd
+
+    code, radars = pd.factorize(lut_pdf["RADAR"], sort=True)
+    parts = [code] + [lut_pdf[c].to_numpy(np.int64) for c in GATE_KEY[1:]]
+    lo = [0] + [int(p.min(initial=0)) for p in parts[1:]]
+    span = [len(radars)] + [int(p.max(initial=0)) - lo_ + 1
+                            for p, lo_ in zip(parts[1:], lo[1:])]
+    if np.prod(np.array(span, dtype=np.float64)) >= 2.0 ** 63:
+        raise ValueError("LUT gate keys do not fit in int64")
+    key = _gate_key(parts, lo, span)
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    if (key[1:] == key[:-1]).any():
+        raise ValueError("LUT has a duplicate (RADAR, SWEEP, az_idx, "
+                         "rng_idx) gate key")
+    x = lut_pdf["x_idx"].to_numpy(np.int64)[order]
+    y = lut_pdf["y_idx"].to_numpy(np.int64)[order]
+    y0 = int(y.min(initial=0))
+    ny = int(y.max(initial=0)) - y0 + 1
+    xy, pixel = np.unique(x * ny + (y - y0), return_inverse=True)
+    pixels = np.stack([xy // ny, xy % ny + y0], axis=1)
+    return CompiledLut(radars.to_numpy(), lo, span, key, pixel, pixels,
+                       lut_pdf["height"].to_numpy(np.float64)[order])
+
+
+def composite_frames(gates, lut: CompiledLut):
+    """Dense numpy twin of ``rain_rate(vertical_composite(polar_to_grid(
+    gates, lut, ["zh_lin"]), ["zh_lin"], visib_col=None))`` with the
+    same row semantics, on a pandas frame of gates (TIMESTAMP, RADAR,
+    SWEEP, az_idx, rng_idx, zh_lin; null as NaN) in any order:
+
+    - inner join: a gate with no LUT match (unknown radar, index beyond
+      the LUT, null key) drops out;
+    - per (TIMESTAMP, RADAR, SWEEP, pixel) slot: mean ``zh_lin``
+      ignoring nulls, mean height over all matched gates;
+    - per (TIMESTAMP, pixel): ``w = 10^(β·h/1000)``, ``zh_lin = Σz·w /
+      Σw`` over the slots with a valid mean (null if none), ``w_total =
+      Σw`` over all slots, Marshall-Palmer ``rain_rate`` null where
+      ``zh_lin`` is; a pixel is emitted if any gate maps to it.
+
+    Returns pandas TIMESTAMP long, x_idx int, y_idx int, zh_lin,
+    w_total, rain_rate (nulls as NaN)."""
+    import pandas as pd
+
+    radar = pd.Categorical(gates["RADAR"], categories=lut.radars)
+    parts, ok = [radar.codes], radar.codes >= 0
+    for c, lo_, sp in zip(GATE_KEY[1:], lut.lo[1:], lut.span[1:]):
+        v = gates[c].fillna(lo_ - 1).to_numpy(np.int64)
+        ok &= (v >= lo_) & (v < lo_ + sp)
+        parts.append(v)
+    key = _gate_key(parts, lut.lo, lut.span)
+    at = np.searchsorted(lut.key, key)
+    hit = at < len(lut.key)
+    hit[hit] = lut.key[at[hit]] == key[hit]
+    ok &= hit
+    at = at[ok]
+    ts = gates["TIMESTAMP"].to_numpy(np.int64)[ok]
+    z = gates["zh_lin"].to_numpy(np.float64)[ok]
+    # slot = (TIMESTAMP, pixel, RADAR·SWEEP), polar_to_grid's groups;
+    # dividing out the RADAR·SWEEP code leaves the frame pixel
+    n_rs = lut.span[0] * lut.span[1]
+    n_pix = max(len(lut.pixels), 1)
+    times, t_code = np.unique(ts, return_inverse=True)
+    rs = lut.key[at] // (lut.span[2] * lut.span[3])
+    slot = (t_code * n_pix + lut.pixel[at]) * n_rs + rs
+    slots, g2s = np.unique(slot, return_inverse=True)
+    frames, s2f = np.unique(slots // n_rs, return_inverse=True)
+    valid = ~np.isnan(z)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        z_mean = (np.bincount(g2s, weights=np.where(valid, z, 0.0))
+                  / np.bincount(g2s, weights=valid))
+        h_mean = (np.bincount(g2s, weights=lut.height[at])
+                  / np.bincount(g2s))
+        w = 10.0 ** (BETA * h_mean / 1000.0)
+        has = ~np.isnan(z_mean)
+        zh = (np.bincount(s2f, weights=np.where(has, z_mean * w, 0.0))
+              / np.bincount(s2f, weights=np.where(has, w, 0.0)))
+        rr = np.maximum((zh / A_QPE) ** (1.0 / B_QPE), 0.0)
+    xy = lut.pixels[frames % n_pix]
+    return pd.DataFrame({
+        "TIMESTAMP": times[frames // n_pix],
+        "x_idx": xy[:, 0].astype(np.int32),
+        "y_idx": xy[:, 1].astype(np.int32),
+        "zh_lin": zh, "w_total": np.bincount(s2f, weights=w),
+        "rain_rate": rr})
 
 
 def temporal_smooth(grids: DataFrame, value_col: str = "rain_rate",

@@ -11,6 +11,7 @@ Arrow-based pandas interchange, UTC session time.
 from __future__ import annotations
 
 import os
+import shlex
 
 from pyspark.sql import SparkSession
 
@@ -53,20 +54,44 @@ def default_driver_memory() -> str:
     return f"{min(total // 2**21, MAX_DRIVER_MEM_MB)}m"
 
 
+def _submitted_master() -> str | None:
+    """The master spark-submit supplies, else None, without starting a
+    JVM (its heap size must still be settable): ``--master`` in
+    ``$PYSPARK_SUBMIT_ARGS`` (read when pyspark launches its JVM), else
+    ``spark.master`` of the JVM that launched this process
+    (``$PYSPARK_GATEWAY_PORT``, set by spark-submit)."""
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    for flag, value in zip(args, args[1:] + [""]):
+        if flag == "--master":
+            return value
+        if flag.startswith("--master="):
+            return flag.split("=", 1)[1]
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        from pyspark import SparkContext
+
+        SparkContext._ensure_initialized()  # connects to the running JVM
+        return SparkContext._jvm.java.lang.System.getProperty("spark.master")
+    return None
+
+
 def get_spark(app_name: str = "rainforest-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Local tests run ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
-    master comes from spark-submit and everything here still applies.
+    The master is ``master`` if given, else the one spark-submit
+    supplies (a real cluster), else ``local[$SPARK_GRAFT_CPUS]``;
+    everything else here applies to all three.
     """
     cpus = default_parallelism()
-    master = master or f"local[{cpus}]"
+    submitted = None if master else _submitted_master()
+    master = master or submitted or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name)
+    if master != submitted:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+        builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.autoBroadcastJoinThreshold", str(AUTO_BROADCAST_BYTES))
         .config("spark.sql.caseSensitive", "true")

@@ -14,15 +14,18 @@ The reference implements real time as a polling daemon
 |                               | neighbour frames                         |
 | missing radars → quality (T5) | per-window observed-radar codes          |
 | hourly HZT reuse (T6)         | stream-static join                       |
-| file-per-timestamp sink (T7)  | foreachBatch: one composite collect,     |
-|                               | numpy per frame, one idempotent          |
-|                               | partitioned write                        |
+| file-per-timestamp sink (T7)  | foreachBatch: one Arrow collect of the   |
+|                               | gates, numpy composite and frames, one   |
+|                               | idempotent partitioned write             |
 
-The streaming query builds its composite with the SAME batch operators
-(grid/qpe.py) inside foreachBatch — one code path for batch and RT,
-which is the point of re-expressing the daemon on Spark; the per-frame
-post-processing runs the numpy twins of the batch operators on the
-driver, as the daemon does.
+``run_rt_pipeline`` composes the batch DataFrame operators (grid/qpe.py)
+inside foreachBatch.  ``run_rt_postprocessed``, the daemon's full
+chain, does what the daemon does on its one node: it collects a
+micro-batch's gates once and composites and post-processes them with
+the numpy twins of the batch operators in Python.  Batch and RT
+share the LUT, the row semantics and the arbiter: the DataFrame
+operators stay the batch path, and tests and the benchmark check the
+stream against them.
 """
 
 from __future__ import annotations
@@ -109,16 +112,18 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
         composite → rain rate → two-frame mean + disaggregation ratio
         → advection blend against the PREVIOUS frame
 
-    Each micro-batch builds its composite with the SAME batch operators
-    (grid/qpe polar_to_grid → vertical_composite → rain_rate), so batch
-    and stream share the composite code, and collects it ONCE; an empty
-    collect is an empty batch.  Then, like the daemon, it post-processes
-    whole frames with numpy on the driver in TIMESTAMP order
-    (grid/qpe.temporal_smooth_frames, grid/advection.
-    advect_blend_frames — the numpy twins of temporal_smooth and
-    advect_blend_series, which stay the batch path and the arbiter).
-    One partitioned write of the post partitions follows, a dynamic
-    overwrite → idempotent on retry (T7).
+    The LUT is collected and compiled once, when the query starts
+    (grid/qpe.compile_lut).  Each micro-batch collects only the gate
+    columns it needs, ONCE, with Arrow, and composites them in Python
+    like the daemon (grid/qpe.composite_frames, the numpy twin
+    of polar_to_grid → vertical_composite → rain_rate); an empty
+    composite is an empty batch.  It then post-processes whole frames
+    with numpy in TIMESTAMP order (grid/qpe.temporal_smooth_frames,
+    grid/advection.advect_blend_frames — the twins of temporal_smooth
+    and advect_blend_series).  Batch and stream share the LUT and the
+    row semantics; the DataFrame operators stay the batch path and the
+    arbiter.  One partitioned write of the post partitions follows, a
+    dynamic overwrite → idempotent on retry (T7).
 
     Prev-frame state is the post store itself: every post partition
     carries its frame's composite columns, so a micro-batch reads, in
@@ -146,13 +151,11 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
 
     from rainforest_spark.grid.advection import advect_blend_frames
     from rainforest_spark.grid.qpe import (
-        polar_to_grid, rain_rate, temporal_smooth_frames, vertical_composite,
+        GATE_KEY, compile_lut, composite_frames, temporal_smooth_frames,
     )
 
-    # materialised once: each micro-batch's broadcast build of the LUT
-    # then reads memory instead of re-running the LUT's own plan (a
-    # pandas-built 144k-row LUT cost ~0.5 s per micro-batch, 4 cores)
-    lut = lut.localCheckpoint()
+    lut = compile_lut(lut.select(*GATE_KEY, "x_idx", "y_idx", "height")
+                      .toArrow().to_pandas())
     stream = polar_file_stream(spark, source_path, schema)
     post_dir = f"{sink_dir}/post"
     frame_schema = ("TIMESTAMP long, x_idx int, y_idx int, zh_lin double, "
@@ -164,13 +167,11 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
     def names(ddl):
         return [c.split()[0] for c in ddl.split(", ")]
 
-    frame_cols = names(frame_schema)
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bs = batch_df.sparkSession
-        comp = rain_rate(vertical_composite(
-            polar_to_grid(batch_df, lut, ["zh_lin"]),
-            ["zh_lin"], visib_col=None)).select(*frame_cols).toPandas()
+        comp = composite_frames(
+            batch_df.select("TIMESTAMP", *GATE_KEY, "zh_lin").toArrow()
+            .to_pandas(), lut)
         if comp.empty:
             return
         ts_list = set(comp["TIMESTAMP"].tolist())

@@ -87,3 +87,40 @@ def test_checkpoint_checksum_off_only_on_local_master(monkeypatch, master,
     conf = session.get_spark(master=master)
     assert conf.get(
         "spark.sql.streaming.checkpoint.fileChecksum.enabled") == want
+
+
+class _MasterRecordingBuilder(_RecordingBuilder):
+    """A ``_RecordingBuilder`` that also records ``master`` calls."""
+
+    def __init__(self):
+        super().__init__()
+        self.masters = []
+
+    def master(self, master):
+        self.masters.append(master)
+        return self
+
+
+@pytest.mark.parametrize("submit_args, masters, checksum", [
+    ("--master local[1] pyspark-shell", [], "false"),
+    ("--master spark://h:7077 pyspark-shell", [], None),
+    (None, ["local[2]"], "false")])
+def test_spark_submit_master_is_kept(monkeypatch, submit_args, masters,
+                                     checksum):
+    from types import SimpleNamespace
+
+    from rainforest_spark import session
+
+    builder = _MasterRecordingBuilder()
+    monkeypatch.setattr(session, "SparkSession",
+                        SimpleNamespace(builder=builder))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    if submit_args is None:
+        monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    else:
+        monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", submit_args)
+    conf = session.get_spark()
+    assert builder.masters == masters
+    assert conf.get(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled") == checksum

@@ -233,7 +233,7 @@ def test_streaming_batch_parity_full_rt_chain(spark, tmp_path):
     computation over the same scans, frame by frame — including the
     prev-frame state surviving a restart: frame 3 arrives in a SECOND
     availableNow run and must still blend against frame 2 from the
-    frames store."""
+    post/ store."""
     from rainforest_spark.grid.advection import advect_blend_series
     from rainforest_spark.grid.lookup import polar_to_cart_lut
     from rainforest_spark.grid.qpe import (
