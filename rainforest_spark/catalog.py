@@ -9,11 +9,15 @@ Re-expresses the reference's ``Database`` / ``TableDict`` /
   ``UNIX_TIMESTAMP()`` (database.py:227-234), optional sink, and the
   RAM-gated collect policy (stay distributed when the estimated result
   exceeds ``WARNING_RAM_MB``; database.py:190-201, constants.py:325).
+- ``upsert``: a daily-partition upsert into a table registered from a
+  path, followed by a re-registration so later reads see the new files.
 
 Spark-first deltas from the reference: the catalog is just the Spark
 catalog (temp views) — Catalyst handles pushdown/pruning/broadcast; the
 size estimate reuses the reference's ``rows × cols × 4B`` heuristic
-(database.py:192-193) but only forces a count when a collect is requested.
+(database.py:192-193).  A collect first ships a small bounded head of
+the result; only a result larger than that head is counted before the
+gate decides, so a small read runs its plan once.
 """
 
 from __future__ import annotations
@@ -45,6 +49,8 @@ class TableInfo:
 
     name: str
     df: DataFrame
+    #: the file glob the table was registered from; None for a DataFrame
+    path: str | None = None
     _summary: dict | None = field(default=None, repr=False)
 
     def summary(self, time_col: str = "TIMESTAMP") -> dict:
@@ -73,9 +79,30 @@ class Database:
         ``registerTempTable``).
         """
         for name, src in sources.items():
-            df = src if isinstance(src, DataFrame) else read_df(self.spark, src)
+            path = None if isinstance(src, DataFrame) else src
+            df = src if path is None else read_df(self.spark, path)
             df.createOrReplaceTempView(name)
-            self.tables[name] = TableInfo(name, df)
+            self.tables[name] = TableInfo(name, df, path)
+
+    def upsert(self, name: str, new_rows: DataFrame, key_cols: list[str],
+               partition_col: str = "day") -> None:
+        """``upsert_daily_partition`` into the files table ``name`` was
+        registered from, then re-register it.
+
+        A registered view keeps the file listing it was planned with, so
+        without the re-registration the next read of a rewritten day
+        fails on a file the upsert removed.  A table registered from a
+        DataFrame has no files to write to: ``ValueError``.
+        """
+        from rainforest_spark.sources.writers import upsert_daily_partition
+
+        path = self.tables[name].path
+        if path is None:
+            raise ValueError(f"table {name!r} was registered from a DataFrame, "
+                             "not a path; there is nothing to upsert into")
+        upsert_daily_partition(self.spark, new_rows, path, key_cols,
+                               partition_col)
+        self.add_tables({name: path})
 
     def estimate_result_mb(self, df: DataFrame, n_rows: int) -> float:
         """rows × cols × 4 bytes, the reference's float32 heuristic
@@ -90,6 +117,20 @@ class Database:
           (database.py:200-222).
         - ``to_memory`` → collect to pandas only under the RAM gate
           (database.py:190-201); else return the lazy DataFrame.
+
+        The gate admits ``cap = WARNING_RAM_MB·2²⁰ / (4·cols)`` rows.  A
+        collect first takes a bounded head, ``limit(probe + 1)``, with
+        ``probe = cap // 64``: a result of at most ``probe`` rows is that
+        head, in one pass of the plan (one Spark job for a scan, a
+        top-K for ``ORDER BY``).  A larger result is counted, and the
+        gate then collects it in full or returns it lazily, as without
+        the head — so a result above ``probe`` rows, collected or not,
+        pays one extra bounded pass of the plan.  The probe stays far
+        below ``cap``: ``ORDER BY`` under a limit plans a top-K that
+        allocates 2·limit slots per task up front (a ``cap``-sized limit
+        exhausted a 3g driver heap), and a head near ``cap`` rows could
+        exceed ``spark.driver.maxResultSize`` for a result that the gate
+        returns lazily.  ``to_memory=False`` runs no job.
         """
         df = self.spark.sql(parse_query(sql_query))
         if output_file:
@@ -98,7 +139,12 @@ class Database:
             write_query_result(df, output_file)
             return df
         if to_memory:
-            n = df.count()
+            # a command's result (e.g. CREATE VIEW) has no columns
+            cap = int(WARNING_RAM_MB * 2**20 // (4 * max(len(df.columns), 1)))
+            probe = max(cap // 64, 1)            # 8 MB at 4 B per cell
+            head = df.limit(probe + 1).toPandas()
+            hit = len(head) <= probe
+            n = len(head) if hit else df.count()
             if self.estimate_result_mb(df, n) <= WARNING_RAM_MB:
-                return df.toPandas()
+                return head if hit else df.toPandas()
         return df
