@@ -119,13 +119,16 @@ class Database:
           (database.py:190-201); else return the lazy DataFrame.
 
         The gate admits ``cap = WARNING_RAM_MB·2²⁰ / (4·cols)`` rows.  A
-        collect first takes a bounded head, ``limit(probe + 1)``, with
-        ``probe = cap // 64``: a result of at most ``probe`` rows is that
-        head, in one pass of the plan (one Spark job for a scan, a
-        top-K for ``ORDER BY``).  A larger result is counted, and the
-        gate then collects it in full or returns it lazily, as without
-        the head — so a result above ``probe`` rows, collected or not,
-        pays one extra bounded pass of the plan.  The probe stays far
+        collect first takes a bounded head, ``limit(probe + 1)`` with
+        ``probe = cap // 1024``: a result of at most ``probe`` rows is that
+        head, in one pass of the plan (one Spark job for a scan, a top-K
+        for ``ORDER BY``).  A larger result is counted, and the gate then
+        collects it in full or returns it lazily, as without the head.
+        Such a miss pays a whole extra pass, not a small one: the Arrow
+        collect of a limit takes up to ``probe + 1`` rows from *each*
+        partition and shuffles them to one, so the bound holds per
+        partition, a scan reads at least the first row group of every
+        partition, and an aggregate runs in full.  The probe stays far
         below ``cap``: ``ORDER BY`` under a limit plans a top-K that
         allocates 2·limit slots per task up front (a ``cap``-sized limit
         exhausted a 3g driver heap), and a head near ``cap`` rows could
@@ -141,10 +144,12 @@ class Database:
         if to_memory:
             # a command's result (e.g. CREATE VIEW) has no columns
             cap = int(WARNING_RAM_MB * 2**20 // (4 * max(len(df.columns), 1)))
-            probe = max(cap // 64, 1)            # 8 MB at 4 B per cell
+            # per partition: 512 KB at 4 B per cell, ~8 MB shuffled for a
+            # 16-file scan whose full head is thrown away
+            probe = max(cap // 1024, 1)
             head = df.limit(probe + 1).toPandas()
-            hit = len(head) <= probe
-            n = len(head) if hit else df.count()
-            if self.estimate_result_mb(df, n) <= WARNING_RAM_MB:
-                return head if hit else df.toPandas()
+            if len(head) <= probe:
+                return head
+            if self.estimate_result_mb(df, df.count()) <= WARNING_RAM_MB:
+                return df.toPandas()
         return df

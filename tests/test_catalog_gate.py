@@ -84,7 +84,8 @@ def test_lazy_read_runs_no_job(spark, db):
 
 
 def test_command_result_is_collected(db):
-    """A command's result has no columns; it still goes through the gate."""
+    """A command's result has no columns and no rows: its empty head is
+    the result."""
     got = db.query("CREATE OR REPLACE TEMP VIEW gate_v AS SELECT a FROM gate_t")
     assert isinstance(got, pd.DataFrame) and got.empty
 
