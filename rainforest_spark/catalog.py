@@ -17,7 +17,8 @@ catalog (temp views) — Catalyst handles pushdown/pruning/broadcast; the
 size estimate reuses the reference's ``rows × cols × 4B`` heuristic
 (database.py:192-193).  A collect first ships a small bounded head of
 the result; only a result larger than that head is counted before the
-gate decides, so a small read runs its plan once.
+gate decides, so a small read runs its plan once and a larger one pays
+the head as an extra pass.
 """
 
 from __future__ import annotations
