@@ -33,12 +33,11 @@ def cmd_query(args) -> int:
     for spec in args.table or []:
         name, path = spec.split("=", 1)
         db.add_tables({name: path})
-    result = db.query(args.sql, output_file=args.output)
+    # printing only -n rows needs no collect: a lazy result runs one
+    # show(n), where the RAM-gated collect would take a head and count
+    result = db.query(args.sql, to_memory=False, output_file=args.output)
     if args.output is None:
-        if hasattr(result, "show"):
-            result.show(args.n)        # lazy DataFrame (big result)
-        else:
-            print(result.to_string())  # collected pandas
+        result.show(args.n)
     return 0
 
 

@@ -121,3 +121,31 @@ def test_upsert_into_dataframe_table_raises(spark):
     db.add_tables({"frame_t": rev})
     with pytest.raises(ValueError, match="DataFrame"):
         db.upsert("frame_t", rev, ["a", "b"], partition_col="a")
+
+
+def test_cli_query_prints_at_most_n_rows(spark, tmp_path, capsys,
+                                         monkeypatch):
+    """``cli query`` without ``--output`` runs the query lazily and shows
+    ``-n`` rows: a small result is bounded by ``-n`` too, and an
+    over-gate one pays no head or count, only the show's job."""
+    from rainforest_spark import catalog
+    from rainforest_spark.cli import main
+
+    monkeypatch.setattr(catalog, "get_spark", lambda: spark)
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame(ROWS, "a int, b int").coalesce(1) \
+        .write.parquet(path)
+    _, register_jobs = _jobs(
+        spark, lambda: catalog.Database(spark).add_tables({"t": path}))
+    argv = ["query", "SELECT a, b FROM t ORDER BY a", "-t", f"t={path}"]
+    assert main(argv + ["-n", "5"]) == 0
+    rows = [ln for ln in capsys.readouterr().out.splitlines()
+            if ln.startswith("|")][1:]                 # minus the header
+    assert [int(r.split("|")[1]) for r in rows] == [0, 1, 2, 3, 4]
+
+    # cap = 100 rows for two columns: the 200-row result is over the gate
+    monkeypatch.setattr(catalog, "WARNING_RAM_MB", 100 * 8 / 2**20)
+    rc, jobs = _jobs(spark, lambda: main(argv + ["-n", "3"]))
+    assert rc == 0 and jobs == register_jobs + 1
+    assert len([ln for ln in capsys.readouterr().out.splitlines()
+                if ln.startswith("|")]) == 1 + 3
