@@ -13,9 +13,9 @@ ETL.  This package re-expresses the whole surface on DataFrame/SQL/Catalyst:
                    upsert, anti-join incremental append (SURVEY §2.1).
 - ``operators``  — the relational operator library (SURVEY §2.2-2.8):
                    filters, joins (as-of, latest-per-run, nearest-centroid),
-                   aggregations (dB-domain logmean, argmax-linked, weighted
-                   vertical), windows (sessionization, lead-fill, weighted
-                   quantiles), scores, dedup, similarity, text analysis.
+                   aggregations (mode, session paths), windows (ranged
+                   cumulative sums, weighted quantiles), scores, dedup,
+                   similarity, text analysis.
 - ``grid``       — polar→Cartesian geometry pipeline as DataFrame jobs.
 - ``ml``         — MLlib RandomForest QPE + a-posteriori bias correction.
 - ``streaming``  — Structured Streaming re-expression of the RT daemon.

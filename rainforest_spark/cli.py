@@ -60,9 +60,13 @@ def cmd_qpe(args) -> int:
 
     spark = get_spark("rainforest-qpe")
     polar = read_polar_volumes(spark, args.input)
-    # build the LUT only for the (radar, sweep) pairs actually present —
-    # one tiny distinct scan instead of the full 5×20 geometry
-    present = polar.select("RADAR", "SWEEP").distinct().collect()
+    # one tiny distinct scan names the latest frame, the one the map
+    # holds, and its (radar, sweep) pairs — the LUT covers only those
+    # instead of the full 5×20 geometry
+    present = polar.select("TIMESTAMP", "RADAR", "SWEEP").distinct().collect()
+    ts = max((r["TIMESTAMP"] for r in present), default=0)
+    present = [r for r in present if r["TIMESTAMP"] == ts]
+    polar = polar.filter(polar["TIMESTAMP"] == ts)
     radars = {r["RADAR"]: RADAR_XYZ[r["RADAR"]] for r in present}
     sweeps = sorted({r["SWEEP"] for r in present})
     lut = polar_to_cart_lut(spark, radars, sweeps=sweeps)
@@ -87,10 +91,8 @@ def cmd_qpe(args) -> int:
         grid = apply_vpr_to_zlin(grid, curve, zlin_col="zh_lin",
                                  height_col="height")
     comp = vertical_composite(grid, ["zh_lin"], visib_col=None)
-    rr = rain_rate(comp)
-    ts = rr.agg({"TIMESTAMP": "max"}).collect()[0][0] or 0
-    save_grid_npz(rr, "rain_rate", args.output, timestamp=int(ts))
-    print(json.dumps({"output": args.output, "timestamp": int(ts)}))
+    save_grid_npz(rain_rate(comp), "rain_rate", args.output, timestamp=ts)
+    print(json.dumps({"output": args.output, "timestamp": ts}))
     return 0
 
 

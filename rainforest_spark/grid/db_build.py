@@ -16,7 +16,7 @@ dims), then broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -100,6 +100,33 @@ REF_COL_TYPES = {
 }
 
 
+def fill_odd_slots(df: DataFrame, partition_cols: list[str], ts_col: str,
+                   value_cols: list[str],
+                   slot_sec: int = 300) -> DataFrame:
+    """The 5-min database's slot-fill (reference W4 variant,
+    database_5min/retrieve_dwh_data_5min.py:15-69): a NULL at an ODD
+    5-min slot (:05, :15, ... — ``ts % (2·slot) == slot``) takes the
+    value of the row exactly ``slot_sec`` later (the next even slot).
+    Even-slot nulls stay null, and the fill only applies when the next
+    row really is +slot_sec (the reference shifts by *time*, not by
+    row).  Precip columns are excluded by the caller (the reference
+    never fills ``rre005r0``).
+
+    ``ts_col`` is epoch seconds.  One bounded lead window per
+    partition key — no global window.
+    """
+    w = Window.partitionBy(*partition_cols).orderBy(F.col(ts_col))
+    ts = F.col(ts_col)
+    is_odd = ts % (2 * slot_sec) == slot_sec
+    next_ok = F.lead(ts).over(w) == ts + slot_sec
+    out = df
+    for v in value_cols:
+        out = out.withColumn(
+            v, F.when(is_odd & F.col(v).isNull() & next_ok,
+                      F.lead(v).over(w)).otherwise(F.col(v)))
+    return out
+
+
 def build_gauge_table(gauge: DataFrame, window_sec: int = 600,
                       station_col: str = "STATION",
                       ts_col: str = "TIMESTAMP",
@@ -117,8 +144,6 @@ def build_gauge_table(gauge: DataFrame, window_sec: int = 600,
     attached for the daily-partition upsert either way.
     """
     if window_sec == 300:
-        from rainforest_spark.operators.windows import fill_odd_slots
-
         keys = {station_col, ts_col, "day"}
         vals = [c for c in gauge.columns
                 if c not in keys and c not in no_fill_cols]

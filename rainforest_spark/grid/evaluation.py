@@ -97,12 +97,11 @@ def _bounded_scores(df: DataFrame, est_col: str, ref_col: str,
     u = valid.withColumn("bound", F.lit("all")).unionByName(
         valid.withColumn("bound", cls).filter(F.col("bound").isNotNull()))
     sc = perfscores(u, est_col, ref_col, [model_col, "bound"], min_ref)
-    # ranged=False: (model × bound) ≈ 10 groups over station-hour pairs
-    # gives the sort enough parallelism — this window plan measured
-    # SUBlinear through 100× (sf10, round 6: 2.2× at 100× data), while
-    # the ranged form added ~1.6s of fixed stages per call here
+    # (model × bound) ≈ 10 groups over station-hour pairs gives the
+    # window sort enough parallelism — this plan measured SUBlinear
+    # through 100× (sf10, round 6: 2.2× at 100× data)
     sct = scatter_score(u, est_col, ref_col, [model_col, "bound"],
-                        min_ref, ranged=False)
+                        min_ref)
     return (sc.join(sct, on=[model_col, "bound"], how="left")
             .withColumn("agg", F.lit(agg_label)))
 

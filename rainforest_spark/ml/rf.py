@@ -22,10 +22,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from rainforest_spark.operators.aggregates import sessionize
 
 
 @dataclass
@@ -106,6 +104,23 @@ class RandomForestQPE:
     def feature_importances(self) -> dict[str, float]:
         fi = self.model.featureImportances.toArray()
         return dict(zip(self.features, [float(x) for x in fi]))
+
+
+def sessionize(df: DataFrame, partition_cols: list[str], ts_col: str,
+               gap_sec: int) -> DataFrame:
+    """Event sessionization: a gap > ``gap_sec`` starts a new session.
+
+    Reference A15 ``split_event`` (ml/utils.py:71-126): order timestamps,
+    cumsum of gap-jumps = event id.  Spark-first: ``lag`` + running
+    ``sum`` in one window — one shuffle on the partition key.
+    """
+    w = Window.partitionBy(*partition_cols).orderBy(F.col(ts_col))
+    gap = (F.col(ts_col).cast("long")
+           - F.lag(F.col(ts_col).cast("long")).over(w))
+    is_new = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
+    running = Window.partitionBy(*partition_cols).orderBy(F.col(ts_col)) \
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return df.withColumn("session_id", F.sum(is_new).over(running) - 1)
 
 
 def split_events(df: DataFrame, ts_col: str = "TIMESTAMP",

@@ -9,140 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from rainforest_spark.functions.db import avg_expr_for
-
-
-def table_summary(df: DataFrame, ts_col: str | None = None) -> DataFrame:
-    """count / min / max summary (reference A1, database.py:60-76)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    if ts_col:
-        aggs += [F.min(ts_col).alias("t_min"), F.max(ts_col).alias("t_max")]
-    return df.agg(*aggs)
-
-
-def temporal_aggregate(df: DataFrame, group_cols: list[str], ts_col: str,
-                       window_sec: int, variables: list[str]) -> DataFrame:
-    """Multi-operator tumbling-window aggregation (reference A3,
-    ``aggregate_multi`` common/utils.py:485-508).
-
-    The two 5-min scans of a 10-min gauge window collapse with a
-    per-variable operator (mean / dB-logmean / sum) chosen from the
-    dispatch table.  The bucket is integer ``floor(epoch/window)·window``
-    — cheap, codegen'd, and identical across engines.
-    """
-    bucket = (F.floor(F.col(ts_col).cast("long") / window_sec)
-              * window_sec).alias("bucket_ts")
-    aggs = [avg_expr_for(v).alias(v) for v in variables]
-    return df.groupBy(*group_cols, bucket).agg(*aggs)
-
-
-def argmax_linked_agg(df: DataFrame, group_cols: list[str], anchor: str,
-                      variables: list[str], tie_breaker: str) -> DataFrame:
-    """Neighbourhood aggregation with argmax-linked max/min (reference A4,
-    retrieve_radar_data.py:838-905).
-
-    ``<var>_max`` is the value of ``var`` AT THE ROW where the anchor (ZH;
-    KDP for KDP itself) is maximal — not the row-wise max.  Implemented as
-    ``max_by``-style ``max(struct(anchor, tie, var))`` which is a single
-    shuffle and deterministic given a unique tie_breaker column.
-    """
-    aggs = []
-    for v in variables:
-        aggs.append(avg_expr_for(v).alias(f"{v}_mean"))
-        aggs.append(F.max(F.struct(F.col(anchor), F.col(tie_breaker),
-                                   F.col(v)))[v].alias(f"{v}_max"))
-        aggs.append(F.min(F.struct(F.col(anchor), F.col(tie_breaker),
-                                   F.col(v)))[v].alias(f"{v}_min"))
-    aggs.append(F.count(F.lit(1)).alias("TCOUNT"))
-    return df.groupBy(*group_cols).agg(*aggs)
-
-
-def vertical_aggregate(df: DataFrame, group_cols: list[str],
-                       numeric_vars: list[str],
-                       categorical_vars: list[str] | None = None,
-                       weight: Column | None = None,
-                       beta: float = -0.5,
-                       height_col: str = "HEIGHT",
-                       visib_col: str = "VISIB_mean") -> DataFrame:
-    """Weighted vertical aggregation over the sweep column (reference A5,
-    ml/utils.py:16-61; weights ml/rf.py:394,435-438).
-
-    Weights ``w = 10^(β·h/1000) · visib/100``; numeric vars → Σw·x / Σw;
-    categorical vars (RADAR, HYDRO, …) become weighted one-hot proportions
-    ``<var>_prop_<value>``.
-
-    Spark-first: the one-hot pivot is ``F.pivot`` on a pre-listed value set
-    (so the plan stays static — no extra job to discover values at scale);
-    everything is a single groupBy shuffle.
-    """
-    if weight is None:
-        weight = (F.pow(F.lit(10.0), beta * F.col(height_col) / 1000.0)
-                  * F.col(visib_col) / 100.0)
-    wdf = df.withColumn("__w", weight)
-    aggs = [(F.sum(F.col("__w") * F.col(v)) / F.sum(
-        F.when(F.col(v).isNotNull(), F.col("__w")))).alias(v)
-        for v in numeric_vars]
-    aggs.append(F.sum("__w").alias("w_sum"))
-    out = wdf.groupBy(*group_cols).agg(*aggs)
-    if categorical_vars:
-        # categorical proportions: sum(w·1[v=val])/sum(w) per distinct value
-        cat_items = (categorical_vars.items()
-                     if isinstance(categorical_vars, dict) else
-                     [(c, None) for c in categorical_vars])
-        for cvar, values in cat_items:
-            if values is None:
-                values = [r[0] for r in
-                          df.select(cvar).distinct().orderBy(cvar).collect()]
-            props = [
-                (F.sum(F.when(F.col(cvar) == v, F.col("__w")).otherwise(0.0))
-                 / F.sum("__w")).alias(f"{cvar}_prop_{v}")
-                for v in values
-            ]
-            cat = wdf.groupBy(*group_cols).agg(*props)
-            out = out.join(cat, on=group_cols, how="left")
-    return out
-
-
-def hourly_aggregate(df: DataFrame, group_cols: list[str], ts_col: str,
-                     value_cols: list[str],
-                     require_complete: int | None = None) -> DataFrame:
-    """Mean per (group, hour), optionally only complete hours (count == N).
-
-    Reference A6/A7 (ml/rf.py:564-588, 211-223): six 10-min values per
-    hour, incomplete hours dropped.
-    """
-    hour = F.date_trunc("hour", F.col(ts_col)).alias("hour")
-    aggs = [F.avg(c).alias(c) for c in value_cols]
-    aggs.append(F.count(F.lit(1)).alias("n_in_hour"))
-    out = df.groupBy(*group_cols, hour).agg(*aggs)
-    if require_complete:
-        out = out.filter(F.col("n_in_hour") == require_complete)
-    return out
-
-
-def sessionize(df: DataFrame, partition_cols: list[str], ts_col: str,
-               gap_sec: int) -> DataFrame:
-    """Event sessionization: a gap > ``gap_sec`` starts a new session.
-
-    Reference A15 ``split_event`` (ml/utils.py:71-126): order timestamps,
-    cumsum of gap-jumps = event id.  Spark-first: ``lag`` + running
-    ``sum`` in one window — one shuffle on the partition key.
-    """
-    w = Window.partitionBy(*partition_cols).orderBy(F.col(ts_col))
-    gap = (F.col(ts_col).cast("long")
-           - F.lag(F.col(ts_col).cast("long")).over(w))
-    is_new = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
-    running = Window.partitionBy(*partition_cols).orderBy(F.col(ts_col)) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn("session_id", F.sum(is_new).over(running) - 1)
-
-
-def assign_folds(df: DataFrame, session_col: str, k: int,
-                 seed: int = 42) -> DataFrame:
-    """Deterministic session→fold assignment (reference randomly assigns
-    events to K folds, ml/utils.py:114-115; we hash for reproducibility)."""
-    return df.withColumn(
-        "fold", F.pmod(F.hash(F.col(session_col), F.lit(seed)), F.lit(k)))
+# sessionize lives with its engine caller, ml/rf.split_events
+from rainforest_spark.ml.rf import sessionize
 
 
 def deterministic_mode(df: DataFrame, group_cols: list[str],
@@ -462,8 +330,6 @@ def session_paths(df: DataFrame, user_col: str, ts_col: str,
     partial aggregation absorbs it.  ``max_len`` bounds every array
     and string.
     """
-    from pyspark.sql import Window as _W
-
     s = sessionize(df, [user_col], ts_col, gap_sec)
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     per = (s.withColumn("__us", us)

@@ -33,35 +33,6 @@ def clamp_below(df: DataFrame, col: str, threshold: float,
         col, F.when(F.col(col) < threshold, F.lit(fill)).otherwise(F.col(col)))
 
 
-def physical_consistency_filter(df: DataFrame, zh_col: str = "ZH_mean",
-                                r_col: str = "RRE150Z0") -> DataFrame:
-    """Drop physically inconsistent gauge/radar pairs.
-
-    Reference ml/rf.py:411-420: remove rows where ``ZH < 5 dBZ ∧ R > 0.5``
-    (gauge rain but no echo) or ``ZH > 20 dBZ ∧ R ≤ 0`` (echo but dry
-    gauge).
-    """
-    bad = ((F.col(zh_col) < 5) & (F.col(r_col) > 0.5)) | \
-          ((F.col(zh_col) > 20) & (F.col(r_col) <= 0))
-    return df.filter(~bad | F.col(zh_col).isNull() | F.col(r_col).isNull())
-
-
-def wet_hour_filter(df: DataFrame, station_col: str, ts_col: str,
-                    precip_col: str, threshold: float = 0.1) -> DataFrame:
-    """Keep sub-hourly rows whose (station, hour) precip sum ≥ threshold.
-
-    Reference retrieve_dwh_data.py:108-115 (pandas groupby-transform sum).
-    Spark-first: a window sum avoids the extra join a groupBy+semi-join
-    would shuffle; the window partitions on (station, hour) which is the
-    same shuffle the groupBy needs, so this is one shuffle, not two.
-    """
-    hour = F.date_trunc("hour", F.col(ts_col))
-    w = Window.partitionBy(F.col(station_col), hour)
-    return (df.withColumn("__hr_sum", F.sum(precip_col).over(w))
-            .filter(F.col("__hr_sum") >= threshold)
-            .drop("__hr_sum"))
-
-
 def complete_group_filter(df: DataFrame, group_cols: list[Column | str],
                           expected: int) -> DataFrame:
     """Keep only groups with exactly ``expected`` members.
@@ -73,19 +44,6 @@ def complete_group_filter(df: DataFrame, group_cols: list[Column | str],
     return (df.withColumn("__cnt", F.count(F.lit(1)).over(w))
             .filter(F.col("__cnt") == expected)
             .drop("__cnt"))
-
-
-def exclude_stations(df: DataFrame, station_col: str,
-                     exclude: list[str] | None = None,
-                     exclude_prefix: str | None = None) -> DataFrame:
-    """Station exclusion list (ml/rf.py:410) and SLF-prefix drop
-    (performance/eval_get_estimates.py:69-74)."""
-    out = df
-    if exclude:
-        out = out.filter(~F.col(station_col).isin(exclude))
-    if exclude_prefix:
-        out = out.filter(~F.col(station_col).startswith(exclude_prefix))
-    return out
 
 
 def dedup_by_key(df: DataFrame, key_cols: list[str],

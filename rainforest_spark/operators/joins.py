@@ -12,16 +12,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on: list[str],
-                       how: str = "left") -> DataFrame:
-    """Fact ⋈ small dimension with an explicit broadcast hint.
-
-    Reference J2 (ml/rf.py:247-252 station metadata join), J6-J8 (LUT
-    joins, common/lookup.py).
-    """
-    return fact.join(broadcast(dim), on=on, how=how)
-
-
 def semi_align(left: DataFrame, others: list[DataFrame],
                on: list[str]) -> DataFrame:
     """Keep left rows whose key exists in EVERY other table.

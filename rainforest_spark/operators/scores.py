@@ -37,41 +37,25 @@ def perfscores(df: DataFrame, est_col: str, ref_col: str,
 
 def scatter_score(df: DataFrame, est_col: str, ref_col: str,
                   group_cols: list[str] | None = None,
-                  min_ref: float = 0.1,
-                  ranged: bool = True) -> DataFrame:
+                  min_ref: float = 0.1) -> DataFrame:
     """Germann scatter: half the distance between the weighted 16% and 84%
     quantiles of the dB error, weights ∝ reference precip.
 
     Reference common/utils.py:139-166 + weighted quantile :294-369.
-    By default the cumulative weight goes through ``ranged_cumsum`` —
-    a handful of giant score groups (q34's 3 return flags over the full
-    fact table measured 6.4× at 10× data on the grouped-window plan,
-    ~2× after the ranged rewrite) is exactly the shape where
-    ``Window.partitionBy(group)`` serializes each group into one sort
-    task.  ``ranged=False`` keeps the grouped window — right when the
-    group count × size already parallelizes the sort (grid/evaluation's
+    The cumulative weight is a window per group: grid/evaluation's
     10-group × station-hour shape measured SUBlinear through 100× on
-    the window plan, and the ranged form's extra fixed stages cost more
-    than they save there).  Both quantiles come out of one pass either
-    way.
+    this plan.  Both quantiles come out of one pass.
     """
-    from rainforest_spark.operators.windows import ranged_cumsum
-
     group_cols = group_cols or []
     cond = (F.col(est_col) > min_ref) & (F.col(ref_col) > min_ref)
     d = df.filter(cond).withColumn(
         "__db_err", 10.0 * F.log10(F.col(est_col) / F.col(ref_col)))
-    if group_cols and not ranged:
-        ws = (Window.partitionBy(*[F.col(c) for c in group_cols])
-              .orderBy(F.col("__db_err"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        wt = Window.partitionBy(*[F.col(c) for c in group_cols])
-        cum = (d.withColumn("__cw", F.sum(ref_col).over(ws))
-                .withColumn("__tw", F.sum(ref_col).over(wt)))
-    else:
-        cum = ranged_cumsum(d, "__db_err", ref_col, "__cw",
-                            group_cols=group_cols or None,
-                            total_col="__tw")
+    ws = (Window.partitionBy(*[F.col(c) for c in group_cols])
+          .orderBy(F.col("__db_err"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    wt = Window.partitionBy(*[F.col(c) for c in group_cols])
+    cum = (d.withColumn("__cw", F.sum(ref_col).over(ws))
+            .withColumn("__tw", F.sum(ref_col).over(wt)))
     cum = cum.withColumn("__q", F.col("__cw") / F.col("__tw"))
     # both quantiles in ONE pass: rows past the 16% cut, with the 84%
     # quantile as a conditional min — one groupBy, no self-join

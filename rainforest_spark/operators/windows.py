@@ -24,66 +24,6 @@ def dense_group_ids(df: DataFrame, order_col: str | Column,
             .drop("__gk"))
 
 
-def lead_fill(df: DataFrame, partition_cols: list[str], ts_col: str,
-              value_col: str) -> DataFrame:
-    """Fill a null slot with the next value in time (reference W4,
-    database_5min/retrieve_dwh_data_5min.py:15-69 — the :05 slot takes the
-    :10 value)."""
-    w = Window.partitionBy(*partition_cols).orderBy(F.col(ts_col))
-    return df.withColumn(
-        value_col, F.coalesce(F.col(value_col), F.lead(value_col).over(w)))
-
-
-def fill_odd_slots(df: DataFrame, partition_cols: list[str], ts_col: str,
-                   value_cols: list[str],
-                   slot_sec: int = 300) -> DataFrame:
-    """The 5-min database's slot-fill (reference W4 variant,
-    database_5min/retrieve_dwh_data_5min.py:15-69): a NULL at an ODD
-    5-min slot (:05, :15, ... — ``ts % (2·slot) == slot``) takes the
-    value of the row exactly ``slot_sec`` later (the next even slot).
-    Even-slot nulls stay null, and the fill only applies when the next
-    row really is +slot_sec (the reference shifts by *time*, not by
-    row).  Precip columns are excluded by the caller (the reference
-    never fills ``rre005r0``).
-
-    ``ts_col`` is epoch seconds.  One bounded lead window per
-    partition key — no global window.
-    """
-    w = Window.partitionBy(*partition_cols).orderBy(F.col(ts_col))
-    ts = F.col(ts_col)
-    is_odd = ts % (2 * slot_sec) == slot_sec
-    next_ok = F.lead(ts).over(w) == ts + slot_sec
-    out = df
-    for v in value_cols:
-        out = out.withColumn(
-            v, F.when(is_odd & F.col(v).isNull() & next_ok,
-                      F.lead(v).over(w)).otherwise(F.col(v)))
-    return out
-
-
-def sliding_mean(df: DataFrame, partition_cols: list[str], ts_col: str,
-                 value_col: str, n_rows: int = 2,
-                 out_col: str | None = None) -> DataFrame:
-    """N-frame sliding temporal mean (reference W5, qpe/qpe.py:680-684:
-    ``Xcomb = nanmean(X_prev, X)``)."""
-    w = (Window.partitionBy(*partition_cols).orderBy(F.col(ts_col))
-         .rowsBetween(-(n_rows - 1), 0))
-    return df.withColumn(out_col or f"{value_col}_sliding",
-                         F.avg(value_col).over(w))
-
-
-def disaggregation_ratio(df: DataFrame, partition_cols: list[str],
-                         ts_col: str, proxy_col: str,
-                         out_col: str = "disag_ratio") -> DataFrame:
-    """Temporal disaggregation ratio (reference W6, qpe/qpe.py:719-733):
-    ``ratio = proxy_t / mean(proxy_{t-1}, proxy_t)``."""
-    w = (Window.partitionBy(*partition_cols).orderBy(F.col(ts_col))
-         .rowsBetween(-1, 0))
-    mean2 = F.avg(proxy_col).over(w)
-    return df.withColumn(
-        out_col, F.when(mean2 > 0, F.col(proxy_col) / mean2).otherwise(None))
-
-
 #: hash-sieve 1/512 of rows for bounds: small enough that the
 #: TakeOrdered cap heap sees ~0.2% of a 100 TB scan, large enough that
 #: even small inputs yield a few cut points.  A thin sample (< n keys)

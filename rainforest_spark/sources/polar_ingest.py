@@ -39,6 +39,9 @@ _MN_FNAME_RE = re.compile(
 POLAR_SCHEMA = ("TIMESTAMP bigint, RADAR string, SWEEP int, "
                 "az_idx int, rng_idx int, ZH double, ZV double, "
                 "VISIB double")
+#: the decoded field columns: the double columns of POLAR_SCHEMA
+_POLAR_FIELDS = tuple(c.split()[0] for c in POLAR_SCHEMA.split(", ")
+                      if c.endswith(" double"))
 
 #: reference constants.py:286-292 — pyart/pyrad field names → short names
 PYART_NAMES_MAPPING = {
@@ -147,7 +150,6 @@ def decode_metranet(content: bytes,
 
 
 def read_polar_volumes(spark: SparkSession, path_glob: str,
-                       fields: tuple[str, ...] = ("ZH", "ZV", "VISIB"),
                        fmt: str = "npz") -> DataFrame:
     """binaryFile scan → long polar DataFrame; masks (NaN) become nulls.
 
@@ -203,7 +205,7 @@ def read_polar_volumes(spark: SparkSession, path_glob: str,
                         "az_idx": az.ravel().astype(np.int32),
                         "rng_idx": rg.ravel().astype(np.int32),
                     }
-                    for f in fields:
+                    for f in _POLAR_FIELDS:
                         arr = fdict.get(f)
                         rec[f] = (arr.ravel().astype(np.float64)
                                   if arr is not None
@@ -211,6 +213,7 @@ def read_polar_volumes(spark: SparkSession, path_glob: str,
                     frames.append(pd.DataFrame(rec))
             yield (pd.concat(frames, ignore_index=True) if frames
                    else pd.DataFrame(columns=["TIMESTAMP", "RADAR", "SWEEP",
-                                              "az_idx", "rng_idx", *fields]))
+                                              "az_idx", "rng_idx",
+                                              *_POLAR_FIELDS]))
 
     return bin_df.mapInPandas(decode, schema=POLAR_SCHEMA)

@@ -29,11 +29,6 @@ def read_df(spark: SparkSession, pattern: str, schema=None) -> DataFrame:
     raise ValueError(f"unsupported source suffix: {pattern}")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the driver-provided parquet tables (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def read_xlsx_sheets(path: str) -> dict:
     """Minimal pure-python .xlsx reader: a workbook is a zip of
     SpreadsheetML parts (ECMA-376, public format) — workbook.xml names

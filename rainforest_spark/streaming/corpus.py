@@ -22,7 +22,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rainforest_spark.operators import text_analysis as TA
-from rainforest_spark.streaming.rt import dedup_stream
+
+
+def dedup_stream(stream: DataFrame, keys: list[str],
+                 ts_col: str = "event_time",
+                 watermark: str = "30 minutes") -> DataFrame:
+    """Streaming exact deduplication for ingest pipelines: drop repeated
+    keys (e.g. re-delivered scan files, duplicate document ids) with
+    bounded state.
+
+    ``dropDuplicatesWithinWatermark`` keeps one row per key and expires
+    key state past the watermark — the streaming analogue of the batch
+    fingerprint dedup (operators/dedup.py), sized for continuous
+    training-data ingest where an unbounded dedup state would OOM.
+    """
+    with_ts = stream
+    if dict(stream.dtypes).get(ts_col) != "timestamp":
+        with_ts = stream.withColumn(ts_col,
+                                    F.col(ts_col).cast("timestamp"))
+    return (with_ts.withWatermark(ts_col, watermark)
+            .dropDuplicatesWithinWatermark(keys))
 
 
 def curate_stream(stream: DataFrame, text_col: str = "text",
@@ -100,7 +119,6 @@ def curate_media_stream(stream: DataFrame, id_col: str = "media_id",
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     from rainforest_spark.operators.multimodal import image_phash
-    from rainforest_spark.streaming.rt import dedup_stream
 
     s = (image_phash(stream, content_col)
          .filter(F.col("phash").isNotNull()))

@@ -18,14 +18,13 @@ The reference implements real time as a polling daemon
 |                               | gates, numpy composite and frames, one   |
 |                               | idempotent partitioned write             |
 
-``run_rt_pipeline`` composes the batch DataFrame operators (grid/qpe.py)
-inside foreachBatch.  ``run_rt_postprocessed``, the daemon's full
-chain, does what the daemon does on its one node: it collects a
+``run_rt_postprocessed``, the daemon's full chain, is the one RT path.
+It does what the daemon does on its one node: it collects a
 micro-batch's gates once and composites and post-processes them with
 the numpy twins of the batch operators in Python.  Batch and RT
 share the LUT, the row semantics and the arbiter: the DataFrame
-operators stay the batch path, and tests and the benchmark check the
-stream against them.
+operators (grid/qpe.py) stay the batch path, and tests and the
+benchmark check the stream against them.
 """
 
 from __future__ import annotations
@@ -34,15 +33,18 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: scan files a micro-batch takes from the drop directory at most
+MAX_FILES_PER_TRIGGER = 20
 
-def polar_file_stream(spark: SparkSession, path: str, schema: str,
-                      max_files_per_trigger: int = 20) -> DataFrame:
+
+def polar_file_stream(spark: SparkSession, path: str,
+                      schema: str) -> DataFrame:
     """T1: file-stream source over a drop directory of polar scans
     (parquet), with filename-timestamp extraction like the reference's
     %y%j%H%M parsing (common/utils.py:205-213) generalized to an
     epoch-seconds column in the data."""
     return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
             .parquet(path))
 
 
@@ -68,35 +70,6 @@ def ten_minute_aggregate(stream: DataFrame, value_cols: list[str],
             .groupBy(F.window("event_time", "10 minutes").alias("win"),
                      "STATION", "RADAR", "SWEEP")
             .agg(*aggs))
-
-
-def run_rt_pipeline(spark: SparkSession, source_path: str, schema: str,
-                    sink_dir: str, checkpoint_dir: str,
-                    lut: DataFrame, value_cols: list[str],
-                    trigger_once: bool = True,
-                    trigger_interval: str = "5 minutes"):
-    """T1→T7 wired together; foreachBatch runs the batch grid pipeline
-    and writes one parquet per (micro-batch, timestep) — idempotent by
-    path, mirroring the reference's file-per-timestamp sink."""
-    from rainforest_spark.grid.qpe import polar_to_grid, vertical_composite
-
-    stream = polar_file_stream(spark, source_path, schema)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        grid = polar_to_grid(batch_df, lut, value_cols)
-        comp = vertical_composite(grid, value_cols, visib_col=None)
-        (comp.write.mode("overwrite")
-         .parquet(f"{sink_dir}/batch={batch_id}"))
-
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
@@ -233,23 +206,3 @@ def session_window_aggregate(stream: DataFrame, gap: str = "30 minutes",
                      *keys)
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.avg(value_col).alias(f"{value_col}_mean")))
-
-
-def dedup_stream(stream: DataFrame, keys: list[str],
-                 ts_col: str = "event_time",
-                 watermark: str = "30 minutes") -> DataFrame:
-    """Streaming exact deduplication for ingest pipelines: drop repeated
-    keys (e.g. re-delivered scan files, duplicate document ids) with
-    bounded state.
-
-    ``dropDuplicatesWithinWatermark`` keeps one row per key and expires
-    key state past the watermark — the streaming analogue of the batch
-    fingerprint dedup (operators/dedup.py), sized for continuous
-    training-data ingest where an unbounded dedup state would OOM.
-    """
-    with_ts = stream
-    if dict(stream.dtypes).get(ts_col) != "timestamp":
-        with_ts = stream.withColumn(ts_col,
-                                    F.col(ts_col).cast("timestamp"))
-    return (with_ts.withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(keys))

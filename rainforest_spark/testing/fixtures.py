@@ -167,23 +167,6 @@ def radars_table() -> pd.DataFrame:
          for k, (x, y, z) in RADAR_XYZ.items()])
 
 
-def cached_fixtures() -> dict[str, str]:
-    """Deterministic fixtures at a stable path, generated once per
-    machine (content is a pure function of SEED, ~7 s to build)."""
-    import tempfile
-
-    out_dir = os.path.join(tempfile.gettempdir(),
-                           f"rainforest_fixtures_seed{SEED}")
-    done = os.path.join(out_dir, ".complete")
-    names = ["gauge", "radar", "reference", "stations", "radars"]
-    if os.path.exists(done):
-        return {n: os.path.join(out_dir, f"{n}.parquet") for n in names}
-    paths = write_fixtures(out_dir)
-    with open(done, "w") as f:
-        f.write("ok")
-    return paths
-
-
 def write_fixtures(out_dir: str) -> dict[str, str]:
     """Write all fixture tables as parquet; returns name → path."""
     os.makedirs(out_dir, exist_ok=True)

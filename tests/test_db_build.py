@@ -106,7 +106,7 @@ def test_fill_odd_slots_reference_semantics(spark):
     an odd 5-min slot takes the value 5 minutes LATER; even-slot nulls
     stay null; no fill when the +300 s row is missing; the excluded
     precip column is caller-side (not filled here by construction)."""
-    from rainforest_spark.operators.windows import fill_odd_slots
+    from rainforest_spark.grid.db_build import fill_odd_slots
 
     t0 = 1717200000  # :00 even slot (t0 % 600 == 0)
     rows = [

@@ -229,3 +229,37 @@ def test_cli_qpe_with_corrections(spark, tmp_path, monkeypatch):
     assert np.isfinite(m).sum() > 100
     meta = _json.load(open(out + ".json"))
     assert meta["shape"] == [1, 640, 710]
+
+
+def test_cli_qpe_maps_only_the_latest_frame(spark, tmp_path):
+    """A drop holding two frames gives the map of the later one, the
+    timestamp the metadata names, not a mix of both frames' pixels:
+    the map equals the later frame's composite alone."""
+    import json as _json
+
+    from rainforest_spark.cli import main
+    from rainforest_spark.sources.polar_ingest import encode_volume_npz
+
+    rng = np.random.RandomState(11)
+
+    def volume(lo):
+        return {1: {"ZH": rng.uniform(lo, lo + 2, (60, 40)),
+                    "VISIB": np.full((60, 40), 100.0)}}
+
+    both, late = tmp_path / "both", tmp_path / "late"
+    both.mkdir()
+    late.mkdir()
+    (both / "A241531005.npz").write_bytes(encode_volume_npz(volume(20)))
+    strong = encode_volume_npz(volume(45))
+    (both / "A241531015.npz").write_bytes(strong)
+    (late / "A241531015.npz").write_bytes(strong)
+
+    maps, stamps = {}, {}
+    for drop in (both, late):
+        out = str(tmp_path / f"{drop.name}.npz")
+        assert main(["qpe", str(drop), out]) == 0
+        maps[drop.name] = np.load(out)["data"]
+        stamps[drop.name] = _json.load(open(out + ".json"))["timestamp"]
+    assert stamps["both"] == stamps["late"]
+    assert np.isfinite(maps["late"]).sum() > 100
+    np.testing.assert_array_equal(maps["both"], maps["late"])

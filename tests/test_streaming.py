@@ -70,31 +70,6 @@ def test_ten_minute_aggregate_stream(spark, tmp_path):
     assert set(pdf["radars_seen"]).issubset({"A", "D", "AD"})
 
 
-def test_rt_foreachbatch_grid(spark, tmp_path):
-    from rainforest_spark.grid.lookup import polar_to_cart_lut
-    from rainforest_spark.streaming.rt import run_rt_pipeline
-    from rainforest_spark.testing.fixtures import RADAR_XYZ
-
-    src = str(tmp_path / "drop2")
-    sink = str(tmp_path / "out2")
-    ckpt = str(tmp_path / "ckpt2")
-    os.makedirs(src)
-    rng = np.random.RandomState(6)
-    df = _scan(1717200000, "A", rng)
-    df["zh_lin"] = 10 ** (0.1 * df["ZH"])
-    df.to_parquet(f"{src}/s1.parquet", index=False)
-
-    lut = polar_to_cart_lut(spark, {"A": RADAR_XYZ["A"]}, sweeps=[1],
-                            n_az=360, n_rng=30)
-    schema = SCHEMA + ", zh_lin double"
-    q = run_rt_pipeline(spark, src, schema, sink, ckpt, lut, ["zh_lin"])
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(f"{sink}/batch=0").toPandas()
-    assert len(out) > 50
-    assert {"x_idx", "y_idx", "zh_lin", "w_total"} <= set(out.columns)
-
-
 def test_session_window_stream(spark, tmp_path):
     from rainforest_spark.streaming.rt import session_window_aggregate
 
@@ -129,7 +104,7 @@ def test_dedup_stream(spark, tmp_path):
     bounded by the watermark (T-family + dedup for ingest)."""
     import pandas as pd
 
-    from rainforest_spark.streaming.rt import dedup_stream
+    from rainforest_spark.streaming.corpus import dedup_stream
 
     src = tmp_path / "in"
     src.mkdir()
@@ -309,65 +284,6 @@ def test_streaming_batch_parity_full_rt_chain(spark, tmp_path):
     assert (got[got["TIMESTAMP"] > t0]
             .groupby("TIMESTAMP")["rain_rate_advected"]
             .apply(lambda s: s.notna().any()).all())
-
-
-def test_streaming_batch_parity_grid_pipeline(spark, tmp_path):
-    """run_rt_pipeline's foreachBatch output (polar→grid→composite) is
-    frame-identical to running the same batch operators on the same
-    scans, including across an incremental restart: batch=1 (the second
-    availableNow pass) equals the batch computation over only the newly
-    arrived file."""
-    from rainforest_spark.grid.lookup import polar_to_cart_lut
-    from rainforest_spark.grid.qpe import polar_to_grid, vertical_composite
-    from rainforest_spark.streaming.rt import run_rt_pipeline
-    from rainforest_spark.testing.fixtures import RADAR_XYZ
-
-    src = str(tmp_path / "gp_src")
-    sink = str(tmp_path / "gp_out")
-    ckpt = str(tmp_path / "gp_ckpt")
-    os.makedirs(src)
-    rng = np.random.RandomState(8)
-
-    def scan_file(ts, name):
-        df = _scan(ts, "A", rng)
-        df["zh_lin"] = 10 ** (0.1 * df["ZH"])
-        df.to_parquet(f"{src}/{name}.parquet", index=False)
-
-    scan_file(1717200000, "s1")
-    lut = polar_to_cart_lut(spark, {"A": RADAR_XYZ["A"]}, sweeps=[1],
-                            n_az=360, n_rng=30)
-    schema = SCHEMA + ", zh_lin double"
-
-    def batch_truth(paths):
-        df = spark.read.schema(schema).parquet(*paths)
-        comp = vertical_composite(polar_to_grid(df, lut, ["zh_lin"]),
-                                  ["zh_lin"], visib_col=None)
-        return (comp.toPandas()
-                .sort_values(["x_idx", "y_idx"], ignore_index=True))
-
-    q = run_rt_pipeline(spark, src, schema, sink, ckpt, lut, ["zh_lin"])
-    q.awaitTermination(120)
-    got0 = (spark.read.parquet(f"{sink}/batch=0").toPandas()
-            .sort_values(["x_idx", "y_idx"], ignore_index=True))
-    want0 = batch_truth([f"{src}/s1.parquet"])
-    assert list(got0.columns) == list(want0.columns)
-    pd.testing.assert_frame_equal(got0[["x_idx", "y_idx"]],
-                                  want0[["x_idx", "y_idx"]])
-    np.testing.assert_allclose(got0["zh_lin"], want0["zh_lin"],
-                               rtol=1e-9, atol=1e-12)
-    np.testing.assert_allclose(got0["w_total"], want0["w_total"],
-                               rtol=1e-9, atol=1e-12)
-
-    # incremental arrival: only the new file is reprocessed (batch=1)
-    scan_file(1717200300, "s2")
-    q2 = run_rt_pipeline(spark, src, schema, sink, ckpt, lut, ["zh_lin"])
-    q2.awaitTermination(120)
-    got1 = (spark.read.parquet(f"{sink}/batch=1").toPandas()
-            .sort_values(["x_idx", "y_idx"], ignore_index=True))
-    want1 = batch_truth([f"{src}/s2.parquet"])
-    assert len(got1) == len(want1)
-    np.testing.assert_allclose(got1["zh_lin"], want1["zh_lin"],
-                               rtol=1e-9, atol=1e-12)
 
 
 def test_processing_time_trigger_converges_to_batch(spark, tmp_path):
