@@ -1,8 +1,9 @@
 """The RT micro-batch's driver-side post-processing and its failure
 paths: the numpy frame kernels equal the batch DataFrame operators, a
 post store that cannot be read fails the batch, a query killed
-mid-batch restarts and converges, and the micro-batch write leaves the
-caller's session conf alone and the sink with the post store only."""
+mid-batch (or mid-commit) restarts and converges, the micro-batch write
+leaves the caller's session conf alone and the sink with the post store
+only, and a micro-batch is one Spark job whatever the store's age."""
 
 from __future__ import annotations
 
@@ -196,3 +197,111 @@ def test_rt_restart_after_failed_batch_converges_to_batch(spark, rt):
     for c in POST_COLS:
         np.testing.assert_allclose(got[c], want[c], rtol=1e-9, atol=1e-12,
                                    equal_nan=True, err_msg=c)
+
+
+def _assert_post_equals_batch_chain(spark, rt, timestamps):
+    """The post store equals the batch DataFrame chain on every scan in
+    the drop directory."""
+    from rainforest_spark.grid.advection import advect_blend_series
+    from rainforest_spark.grid.qpe import (
+        polar_to_grid, rain_rate, temporal_smooth, vertical_composite,
+    )
+
+    comp = rain_rate(vertical_composite(
+        polar_to_grid(spark.read.schema(SCHEMA).parquet(rt["src"]),
+                      rt["lut"], ["zh_lin"]), ["zh_lin"], visib_col=None)) \
+        .select("TIMESTAMP", "x_idx", "y_idx", "zh_lin", "w_total",
+                "rain_rate")
+    blend = (advect_blend_series(comp, "rain_rate")
+             .withColumnRenamed("rain_rate", "rain_rate_advected"))
+    want = (temporal_smooth(comp, "rain_rate", proxy_col="zh_lin")
+            .join(blend, on=KEYS, how="left").toPandas()
+            .sort_values(KEYS, ignore_index=True))
+    got = (spark.read.parquet(f"{rt['sink']}/post").toPandas()
+           .sort_values(KEYS, ignore_index=True)[want.columns])
+    got["TIMESTAMP"] = got["TIMESTAMP"].astype("int64")
+
+    assert sorted(got["TIMESTAMP"].unique()) == timestamps
+    pd.testing.assert_frame_equal(got[KEYS], want[KEYS])
+    for c in POST_COLS:
+        np.testing.assert_allclose(got[c], want[c], rtol=1e-9, atol=1e-12,
+                                   equal_nan=True, err_msg=c)
+
+
+@pytest.mark.parametrize("late", [False, True])
+def test_rt_commit_fault_after_first_swap_converges(spark, rt, monkeypatch,
+                                                    late):
+    """One micro-batch writes frames T0 and T0 + 300; its commit fails
+    after T0 is in place.  With ``late``, T0 arrives after T0 + 300 was
+    stored, so the failed commit had already moved the stored successor
+    aside: the restart must put it back and re-pair it."""
+    post = f"{rt['sink']}/post"
+    _scan_file(rt["src"], T0 + 300, rt["rng"])
+    if late:
+        q = rt["run"]()
+        q.awaitTermination(180)
+        assert q.exception() is None
+    _scan_file(rt["src"], T0, rt["rng"])
+    rename = os.rename
+
+    def failing_rename(src, dst):
+        # foreachBatch runs in this process: the staged successor of
+        # the faulted batch (id 1 after the stored successor's batch 0)
+        # never reaches its place
+        if str(src).endswith(f"/_staging-{int(late)}/TIMESTAMP={T0 + 300}"):
+            raise OSError("injected commit fault")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    q = rt["run"]()
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(180)
+    monkeypatch.undo()
+    assert _partitions(post) == [T0]
+    assert glob.glob(f"{post}/_staging-*")
+
+    q = rt["run"]()
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert not glob.glob(f"{post}/_staging-*")
+    _assert_post_equals_batch_chain(spark, rt, [T0, T0 + 300])
+
+
+def test_micro_batch_is_one_spark_job_whatever_the_store_age(spark, rt):
+    from rainforest_spark.streaming.rt import run_rt_postprocessed
+
+    with pytest.raises(ValueError):
+        run_rt_postprocessed(spark, rt["src"], SCHEMA, f"file://{rt['sink']}",
+                             rt["ckpt"], rt["lut"])
+    assert not spark.streams.active
+    assert not os.path.exists(rt["ckpt"])
+
+    # an old store: more partitions than Spark's 32-path parallel
+    # listing threshold, written with pyarrow
+    post = f"{rt['sink']}/post"
+    old = pd.DataFrame({"x_idx": np.int32([0]), "y_idx": np.int32([0]),
+                        **{c: [1.0] for c in ["zh_lin", "w_total",
+                                              *POST_COLS]}})
+    for i in range(40):
+        os.makedirs(f"{post}/TIMESTAMP={T0 - 86400 + 300 * i}")
+        old.to_parquet(f"{post}/TIMESTAMP={T0 - 86400 + 300 * i}/"
+                       "part-00000.parquet", index=False)
+    _scan_file(rt["src"], T0, rt["rng"])
+    q = rt["run"]()
+    q.awaitTermination(180)
+    assert q.exception() is None
+
+    _scan_file(rt["src"], T0 + 300, rt["rng"])
+    q = rt["run"]()
+    q.awaitTermination(180)
+    assert q.exception() is None
+    # streaming jobs run under the query's run id as job group
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 1
+    assert len(_partitions(post)) == 42
+    assert not glob.glob(f"{post}/_staging-*")
+    # the one job's micro-batch did pair with its stored predecessor
+    frame = spark.read.parquet(f"{post}/TIMESTAMP={T0 + 300}").toPandas()
+    assert frame["disag_ratio"].notna().any()
+    assert not np.allclose(frame["rain_rate_2frame"], frame["rain_rate"],
+                           equal_nan=True)

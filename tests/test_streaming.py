@@ -61,12 +61,13 @@ def test_ten_minute_aggregate_stream(spark, tmp_path):
 
     out = spark.read.parquet(sink)
     pdf = out.toPandas()
-    assert len(pdf) > 0
-    first = pdf[pdf["win"].apply(lambda w: int(w["start"].timestamp())) == t0 - 600 + 600]
-    # the t0..t0+600 window pairs two scans: TCOUNT = 2 per (az,rng) key?
-    # aggregation is per (STATION, RADAR, SWEEP): 2 scans x 45x30 gates
-    tc = pdf.groupby("radars_seen")["TCOUNT"].max()
-    assert tc.max() >= 2 * 45 * 30 * 0  # sanity: column exists
+    start = pdf["win"].apply(lambda w: int(w["start"].timestamp()))
+    # the aggregate groups per (window, STATION, RADAR, SWEEP): the
+    # t0 window pairs radar A's two scans of 45 x 30 gates, the next
+    # one holds radar D's single scan
+    tcount = pdf.set_index([start, pdf["RADAR"]])["TCOUNT"]
+    assert tcount[(t0, "A")] == 2 * 45 * 30
+    assert tcount[(t0 + 600, "D")] == 45 * 30
     assert set(pdf["radars_seen"]).issubset({"A", "D", "AD"})
 
 
