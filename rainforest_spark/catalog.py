@@ -90,6 +90,13 @@ class Database:
         """``upsert_daily_partition`` into the files table ``name`` was
         registered from, then re-register it.
 
+        The upsert merges each touched day on the driver with pyarrow
+        and commits it through the staged partition swap the RT sink
+        uses too (``sources/writers.swap_partitions``): two Spark jobs,
+        one file per touched day, the incoming row winning a key clash.
+        ``new_rows`` must fit on the driver, the path must be local, and
+        only one writer may write a given day at a time.
+
         A registered view keeps the file listing it was planned with, so
         without the re-registration the next read of a rewritten day
         fails on a file the upsert removed.  A table registered from a

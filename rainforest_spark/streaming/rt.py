@@ -17,7 +17,9 @@ The reference implements real time as a polling daemon
 | file-per-timestamp sink (T7)  | foreachBatch: one Arrow collect of the   |
 |                               | gates, numpy composite and frames, one   |
 |                               | parquet file per timestamp, staged and   |
-|                               | renamed into place                       |
+|                               | renamed into place by the partition swap |
+|                               | the daily upsert commits through too     |
+|                               | (sources/writers.swap_partitions)        |
 
 ``run_rt_postprocessed``, the daemon's full chain, is the one RT path.
 It does what the daemon does on its one node: it collects a
@@ -31,10 +33,13 @@ benchmark check the stream against them.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rainforest_spark.sources.writers import (
+    swap_partitions, undo_partition_swap,
+)
 
 #: scan files a micro-batch takes from the drop directory at most
 MAX_FILES_PER_TRIGGER = 20
@@ -106,55 +111,6 @@ def _read_partitions(post_dir: str, timestamps, schema):
     return frames
 
 
-def _staging_dir(post_dir: str, batch_id: int) -> str:
-    # Spark and pyarrow readers skip names that start with "_"
-    return f"{post_dir}/_staging-{batch_id}"
-
-
-def _undo_commit(post_dir: str, batch_id: int) -> None:
-    """Roll back what a cut commit of ``batch_id`` left: put back every
-    old partition it had moved aside whose place is empty, then remove
-    its staging directory.  Runs before the batch's neighbour read, so
-    a retry re-pairs a back-filled successor instead of losing it."""
-    staging = _staging_dir(post_dir, batch_id)
-    if not os.path.isdir(staging):
-        return
-    for name in os.listdir(staging):
-        old = f"{post_dir}/{name.removeprefix('_old-')}"
-        if name.startswith("_old-") and not os.path.isdir(old):
-            os.rename(f"{staging}/{name}", old)
-    shutil.rmtree(staging)
-
-
-def _write_partitions(post_dir: str, batch_id: int, post, schema) -> None:
-    """Replace the ``TIMESTAMP=<t>`` partitions of ``post_dir`` with the
-    rows of ``post``, one parquet file each.
-
-    The files go to the hidden staging directory of ``batch_id``
-    first; then each partition's old directory is moved into it as
-    ``_old-TIMESTAMP=<t>`` and the staged one renamed into place.
-    Unlike the delete-then-rename of Spark's dynamic-overwrite commit,
-    a commit cut between the two renames loses no stored frame:
-    ``_undo_commit`` puts it back."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    staging = _staging_dir(post_dir, batch_id)
-    parts = []
-    for t, frame in post.groupby("TIMESTAMP", sort=True):
-        part = f"TIMESTAMP={t}"
-        os.makedirs(f"{staging}/{part}")
-        pq.write_table(pa.Table.from_pandas(frame, schema=schema,
-                                            preserve_index=False),
-                       f"{staging}/{part}/part-00000.parquet")
-        parts.append(part)
-    for part in parts:
-        if os.path.isdir(f"{post_dir}/{part}"):
-            os.rename(f"{post_dir}/{part}", f"{staging}/_old-{part}")
-        os.rename(f"{staging}/{part}", f"{post_dir}/{part}")
-    shutil.rmtree(staging)
-
-
 def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
                          sink_dir: str, checkpoint_dir: str,
                          lut: DataFrame, cycle_sec: int = 300,
@@ -186,12 +142,15 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
     The sink is ``<sink_dir>/post/TIMESTAMP=<t>/``, one parquet file
     per frame with the post columns (int32 pixel indices, float64
     values; the timestamp is the directory name), readable with
-    ``spark.read.parquet``.  Each micro-batch stages its files in a
+    ``spark.read.parquet``.  Each micro-batch commits through
+    ``sources/writers.swap_partitions``, the staged swap the daily
+    upsert uses too, tagged with its batch id: it stages its files in a
     hidden ``_staging-<batch_id>`` directory, then moves each old
     partition aside and renames the staged one into place (T7); a
     retried batch id first restores what its cut commit moved aside and
-    removes its staging directory, before it reads its neighbours, so a
-    retry is idempotent and loses no stored frame.
+    removes its staging directory (``undo_partition_swap``), before it
+    reads its neighbours, so a retry is idempotent and loses no stored
+    frame.
 
     Prev-frame state is the post store itself: every post partition
     carries its frame's composite columns, so a micro-batch reads with
@@ -215,6 +174,7 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
     permanently null blend.
     """
     import pandas as pd
+    import pyarrow as pa
 
     from rainforest_spark.grid.advection import advect_blend_frames
     from rainforest_spark.grid.qpe import (
@@ -230,7 +190,9 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
     frame_schema, post_schema = _arrow_schemas()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        _undo_commit(post_dir, batch_id)
+        # before the neighbour read, so a retry re-pairs a back-filled
+        # successor that its cut commit had moved aside
+        undo_partition_swap(post_dir, batch_id)
         comp = composite_frames(
             batch_df.select("TIMESTAMP", *GATE_KEY, "zh_lin").toArrow()
             .to_pandas(), lut)
@@ -250,7 +212,10 @@ def run_rt_postprocessed(spark: SparkSession, source_path: str, schema: str,
         # the batch's frames and the stored successors it re-pairs; a
         # successor that is not in the store has no rows here
         out = series[series["TIMESTAMP"].isin(ts_list | succ_ts)]
-        _write_partitions(post_dir, batch_id, out, post_schema)
+        swap_partitions(post_dir, batch_id, {
+            f"TIMESTAMP={t}": pa.Table.from_pandas(
+                frame, schema=post_schema, preserve_index=False)
+            for t, frame in out.groupby("TIMESTAMP", sort=True)})
 
     writer = (stream.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))
