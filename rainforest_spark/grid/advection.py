@@ -7,17 +7,23 @@ implements the same two stages with plain numpy:
 
 - ``estimate_motion``: global block-matching (phase of the
   cross-correlation argmax over a search window) — a coarse but
-  deterministic stand-in for LK's mean motion field.
+  deterministic stand-in for LK's mean motion field.  It returns
+  whole-pixel shifts.
 - ``advect``: semi-Lagrangian backward resample by the (dy, dx) vector
-  with bilinear interpolation.
+  with bilinear interpolation.  A whole-pixel shift, the only kind
+  ``estimate_motion`` returns, takes a shifted copy instead: the
+  bilinear weights are then exactly 0 and 1, so the copy gives the
+  same values.
 
 Motion estimation is inherently a whole-frame operation, so a single
 pair runs on one dense 640×710 map (~1.2 MB).  The scale axis is TIME:
 ``advect_blend_series`` distributes the whole series as one
-applyInPandas per consecutive frame pair (rows shuffle once on the pair
-key), keeping the same numpy kernel executor-side.  A real-time
-micro-batch holds a few frames on the driver, where
-``advect_blend_frames`` runs the same kernel pair by pair.
+applyInPandas per consecutive frame pair.  The pairs come from one tiny
+successor dimension (each frame and the next one), broadcast-joined to
+the rows once; rows then shuffle once on the pair key, keeping the same
+numpy kernel executor-side.  A real-time micro-batch holds a few frames
+on the driver, where ``advect_blend_frames`` runs the same kernel pair
+by pair.
 """
 
 from __future__ import annotations
@@ -52,8 +58,9 @@ def estimate_motion(prev: np.ndarray, cur: np.ndarray,
     circular correlation, so the whole score surface comes out of one
     FFT product (cross-correlation theorem):
     ``irfft2(rfft2(c) · conj(rfft2(p)))[d] = Σ_i c[i]·p[i−d]``.  The
-    argmax scans the ±max_shift window in the loop's iteration order
-    (strict '>' keeps the first maximum), so ties resolve identically.
+    argmax runs over the ±max_shift window laid out in the loop's
+    iteration order (dy outer, dx inner); ``np.argmax`` returns the first
+    maximum, so ties resolve identically.
     O(N log N) — ~60× faster than the 441-product loop on a 640×710
     frame, which is what makes per-pair advection cheap enough to run
     inside every streaming micro-batch."""
@@ -63,18 +70,33 @@ def estimate_motion(prev: np.ndarray, cur: np.ndarray,
     c = c - c.mean()
     r = np.fft.irfft2(np.fft.rfft2(c) * np.conj(np.fft.rfft2(p)),
                       s=p.shape)
-    best, best_score = (0, 0), -np.inf
-    for dy in range(-max_shift, max_shift + 1):
-        for dx in range(-max_shift, max_shift + 1):
-            score = r[dy % r.shape[0], dx % r.shape[1]]
-            if score > best_score:
-                best_score, best = float(score), (dy, dx)
-    return best
+    d = np.arange(-max_shift, max_shift + 1)
+    window = r[np.ix_(d % r.shape[0], d % r.shape[1])]
+    # the loop's strict '>' from -inf never picks a NaN score and keeps
+    # (0, 0) when nothing beats -inf
+    window = np.where(np.isnan(window), -np.inf, window)
+    best = int(np.argmax(window))
+    if not window.flat[best] > -np.inf:
+        return (0, 0)
+    iy, ix = divmod(best, len(d))
+    return (int(d[iy]), int(d[ix]))
 
 
 def advect(frame: np.ndarray, dy: float, dx: float) -> np.ndarray:
-    """Semi-Lagrangian backward resample with bilinear interpolation."""
+    """Semi-Lagrangian backward resample with bilinear interpolation:
+    ``out[y, x] = frame[y - dy, x - dx]``, NaN where the source lies
+    outside the frame and 0 where the source pixel is NaN.  A whole-pixel
+    (dy, dx) is a shifted copy, equal to the bilinear formula (its
+    weights are 0 and 1)."""
     ny, nx = frame.shape
+    if float(dy).is_integer() and float(dx).is_integer():
+        dy, dx = int(dy), int(dx)
+        out = np.full((ny, nx), np.nan)
+        if abs(dy) < ny and abs(dx) < nx:
+            out[max(dy, 0):ny + min(dy, 0), max(dx, 0):nx + min(dx, 0)] = \
+                np.nan_to_num(frame[max(-dy, 0):ny + min(-dy, 0),
+                                    max(-dx, 0):nx + min(-dx, 0)], nan=0.0)
+        return out
     yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
     sy = yy - dy
     sx = xx - dx
@@ -136,50 +158,53 @@ def advect_blend_series(grids, value_col: str = "rain_rate",
     """Distributed advection over a SERIES of frames: the scale axis at
     100 TB is TIME (thousands of frame pairs), not the 1.2 MB frame.
 
-    Each consecutive (prev, cur) pair becomes one applyInPandas group —
-    rows of both frames shuffle once on the pair key (a frame feeds two
-    pairs, so data duplicates ×2, bounded); the executor densifies the
-    two sparse frames, runs the same numpy estimate_motion/advect/blend
-    used at the driver boundary, and emits the blended CUR frame as
-    sparse rows.  Per-task memory = two dense frames (~5.7 MB float64).
+    Each consecutive (prev, cur) pair becomes one applyInPandas group.
+    One aggregate lists the frames in TIMESTAMP order and expands them
+    into a tiny successor dimension (TIMESTAMP, t_next), broadcast-joined
+    to the rows once.  Each row then emits a ``cur`` copy keyed on its
+    own frame (none for the first frame, which has no predecessor) and a
+    ``prev`` copy keyed on its successor (none for the last frame), so
+    rows shuffle once on the pair key and a frame feeds at most two
+    pairs (data duplicates ×2, bounded).  The executor densifies the two
+    sparse frames, runs the same numpy estimate_motion/advect/blend used
+    at the driver boundary, and emits the blended CUR frame as sparse
+    rows.  Per-task memory = two dense frames (~5.7 MB float64).
 
     Input: long (TIMESTAMP, x_idx, y_idx, value) grid rows; output: the
-    same shape for every frame that has a predecessor.
+    same shape for every frame that has a predecessor.  Rows with a null
+    TIMESTAMP belong to no frame and are dropped.
     """
     import pandas as pd
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
     from pyspark.sql.functions import broadcast
 
-    ts = grids.select("TIMESTAMP").distinct()
-    w = Window.orderBy("TIMESTAMP")     # tiny distinct-frame dim
-    pairs = (ts.withColumn("t_prev", F.lag("TIMESTAMP").over(w))
-             .filter(F.col("t_prev").isNotNull())
-             .select(F.col("TIMESTAMP").alias("pair_t"), "t_prev"))
-    base = grids.select("TIMESTAMP", "x_idx", "y_idx",
-                        F.col(value_col).alias("v"))
-    cur = base.join(broadcast(pairs),
-                    base.TIMESTAMP == pairs.pair_t) \
-        .select("pair_t", F.lit("cur").alias("role"),
-                "x_idx", "y_idx", "v")
-    prev = base.join(broadcast(pairs),
-                     base.TIMESTAMP == pairs.t_prev) \
-        .select("pair_t", F.lit("prev").alias("role"),
-                "x_idx", "y_idx", "v")
-    both = cur.unionByName(prev)
-
-    import numpy as np
+    stamps = F.col("stamps")
+    succ = (grids.agg(F.min("TIMESTAMP").alias("t_first"),
+                      F.sort_array(F.collect_set("TIMESTAMP"))
+                      .alias("stamps"))
+            .select("t_first", F.inline(F.arrays_zip(
+                stamps.alias("TIMESTAMP"),
+                F.slice(stamps, 2, F.size(stamps)).alias("t_next")))))
+    rows = grids.select("TIMESTAMP", "x_idx", "y_idx",
+                        F.col(value_col).alias("v")) \
+        .join(broadcast(succ), "TIMESTAMP")
+    cur_key = F.when(F.col("TIMESTAMP") > F.col("t_first"),
+                     F.col("TIMESTAMP"))
+    both = rows.select(F.inline(F.array(
+        F.struct(cur_key.alias("pair_t"), F.lit(True).alias("cur")),
+        F.struct(F.col("t_next").alias("pair_t"),
+                 F.lit(False).alias("cur")))),
+        "x_idx", "y_idx", "v").filter(F.col("pair_t").isNotNull())
 
     def blend(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = {}
-        for role in ("prev", "cur"):
-            part = pdf[pdf["role"] == role]
+        cur = pdf["cur"].to_numpy(bool)
+        ys, xs, v = (pdf[c].to_numpy() for c in ("y_idx", "x_idx", "v"))
+        frames = []
+        for sel in (~cur, cur):
             m = np.full((ny, nx), np.nan)
-            m[part["y_idx"].to_numpy(), part["x_idx"].to_numpy()] = \
-                part["v"].to_numpy()
-            frames[role] = m
-        out = advection_blend(frames["prev"], frames["cur"],
-                              alpha=alpha, max_shift=max_shift)
+            m[ys[sel], xs[sel]] = v[sel]
+            frames.append(m)
+        out = advection_blend(*frames, alpha=alpha, max_shift=max_shift)
         yy, xx = np.nonzero(np.isfinite(out))
         return pd.DataFrame({
             "TIMESTAMP": np.int64(pdf["pair_t"].iloc[0]),

@@ -2,14 +2,18 @@
 
 The reference precomputes pickled geometry LUTs once and reuses them for
 every query (rainforest/common/lookup.py:137-561).  The Spark-first
-equivalent: materialize the same mappings as small parquet DIMENSION
-TABLES at bootstrap and broadcast-join them everywhere (SURVEY §4
-"precomputed join indices").
+equivalent: build each mapping once as a DataFrame and broadcast-join it
+everywhere (SURVEY §4 "precomputed join indices").
 
 Geometry is pure math (effective-earth-radius beam propagation with the
 Swiss ke = 1.25 replacing the textbook 4/3 — radarprocessing.py:376-389
 ``correct_gate_altitude``; Doviak & Zrnić) — computed driver-side with
-numpy (tiny: 5 radars × 20 sweeps × gates) and loaded as a DataFrame.
+numpy (5 radars × 20 sweeps × 360 × 100 gates at most).  The
+polar→Cartesian LUT is materialised once when it is built
+(``localCheckpoint``), so the plans that join it scan stored rows; a
+``createDataFrame`` literal (a ``LocalRelation`` of up to 3.6M rows)
+would be analysed, planned and scanned again by every job that joins
+it.  The station→pixel LUT (at most 9 rows per gauge) stays a literal.
 
 Reference grid (common/constants.py:112-126): easting (the reference's
 Y_QPE) 255..965 km → 710 bins; northing (the reference's X_QPE)
@@ -66,7 +70,8 @@ def polar_to_cart_lut(spark: SparkSession, radars_xyz: dict[str, tuple],
 
     Reference builds this once per radar (common/lookup.py:540-550,
     qpegrid_to_rad) and indexes numpy arrays with it; here it becomes a
-    broadcastable dimension table for the J7 equi-join.
+    broadcastable dimension table for the J7 equi-join, materialised
+    here (one Spark job) so no plan that joins it carries its rows.
     """
     sweeps = sweeps or list(range(1, len(ELEVATIONS) + 1))
     frames = []
@@ -93,7 +98,8 @@ def polar_to_cart_lut(spark: SparkSession, radars_xyz: dict[str, tuple],
                 "height": np.repeat(h[None, :], n_az, axis=0)[inside]
                 .astype(np.float32),
             }))
-    return spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    return (spark.createDataFrame(pd.concat(frames, ignore_index=True))
+            .localCheckpoint())
 
 
 def station_to_pixel_lut(spark: SparkSession, stations: pd.DataFrame,

@@ -147,6 +147,148 @@ def test_advect_blend_series_distributed(spark):
         assert np.allclose(m[fin], exp[fin], atol=1e-9)
 
 
+def _bilinear(frame, dy, dx):
+    """The semi-Lagrangian bilinear resample, written out in full."""
+    ny, nx = frame.shape
+    yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
+    sy, sx = yy - dy, xx - dx
+    y0 = np.clip(np.floor(sy).astype(int), 0, ny - 2)
+    x0 = np.clip(np.floor(sx).astype(int), 0, nx - 2)
+    fy = np.clip(sy - y0, 0.0, 1.0)
+    fx = np.clip(sx - x0, 0.0, 1.0)
+    f = np.nan_to_num(frame, nan=0.0)
+    out = ((1 - fy) * (1 - fx) * f[y0, x0]
+           + (1 - fy) * fx * f[y0, x0 + 1]
+           + fy * (1 - fx) * f[y0 + 1, x0]
+           + fy * fx * f[y0 + 1, x0 + 1])
+    out[(sy < 0) | (sy > ny - 1) | (sx < 0) | (sx > nx - 1)] = np.nan
+    return out
+
+
+def test_advect_whole_pixel_shift_equals_bilinear():
+    """A whole-pixel shift (negative, zero, beyond the frame, int or
+    integral float) gives exactly the bilinear formula's values."""
+    from rainforest_spark.grid.advection import advect
+
+    rng = np.random.RandomState(31)
+    for shape in [(13, 17), (2, 3)]:
+        f = rng.uniform(0, 10, shape)
+        f[rng.rand(*shape) < 0.15] = np.nan
+        ny, nx = shape
+        for dy in range(-ny - 2, ny + 3):
+            for dx in range(-nx - 2, nx + 3):
+                got = advect(f, dy, dx)
+                want = _bilinear(f, dy, dx)
+                assert got.dtype == want.dtype
+                assert np.array_equal(got, want, equal_nan=True), (dy, dx)
+        assert np.array_equal(advect(f, 1.0, -1.0), _bilinear(f, 1, -1),
+                              equal_nan=True)
+    f32 = rng.uniform(0, 10, (9, 11)).astype(np.float32)
+    assert np.array_equal(advect(f32, -3, 4), _bilinear(f32, -3, 4),
+                          equal_nan=True)
+
+
+def test_advect_fractional_shift_interpolates():
+    from rainforest_spark.grid.advection import advect
+
+    ramp = np.tile(np.arange(8, dtype=np.float64)[:, None], (1, 5))
+    out = advect(ramp, 0.5, 0.0)
+    assert np.isnan(out[0]).all()
+    assert np.allclose(out[1:], ramp[1:] - 0.5)
+    rng = np.random.RandomState(37)
+    f = rng.uniform(0, 10, (12, 15))
+    f[3, 4] = np.nan
+    for dy, dx in [(0.25, -1.5), (-2.75, 3.1), (1, 0.5)]:
+        assert np.array_equal(advect(f, dy, dx), _bilinear(f, dy, dx),
+                              equal_nan=True)
+
+
+def _series(stamps, n=40):
+    """Sparse rows of a blob moving one row per frame, frames in the
+    given TIMESTAMP order."""
+    rng = np.random.RandomState(41)
+    base = rng.uniform(0, 1, (n, n))
+    rows = []
+    for i, t in enumerate(stamps):
+        m = np.roll(base, i, axis=0)
+        yy, xx = np.nonzero(m > 0.3)
+        rows.append(pd.DataFrame({"TIMESTAMP": t,
+                                  "x_idx": xx.astype(np.int32),
+                                  "y_idx": yy.astype(np.int32),
+                                  "rain_rate": m[yy, xx]}))
+    pdf = pd.concat(rows, ignore_index=True)
+    pdf["TIMESTAMP"] = pdf["TIMESTAMP"].astype("Int64")
+    return pdf
+
+
+def _blend_pairs(pdf, n=40, max_shift=5):
+    """Driver-side expectation: each frame blended against the frame
+    before it in sorted TIMESTAMP order, as sparse sorted rows."""
+    from rainforest_spark.grid.advection import advection_blend
+
+    pdf = pdf.dropna(subset=["TIMESTAMP"])
+    dense = {}
+    for t, part in pdf.groupby("TIMESTAMP"):
+        m = np.full((n, n), np.nan)
+        m[part["y_idx"], part["x_idx"]] = part["rain_rate"]
+        dense[int(t)] = m
+    stamps = sorted(dense)
+    out = []
+    for t_prev, t in zip(stamps, stamps[1:]):
+        b = advection_blend(dense[t_prev], dense[t], max_shift=max_shift)
+        yy, xx = np.nonzero(np.isfinite(b))
+        out.append(pd.DataFrame({"TIMESTAMP": np.int64(t),
+                                 "x_idx": xx.astype(np.int32),
+                                 "y_idx": yy.astype(np.int32),
+                                 "rain_rate": b[yy, xx]}))
+    cols = ["TIMESTAMP", "x_idx", "y_idx", "rain_rate"]
+    if not out:
+        return pd.DataFrame(columns=cols)
+    return pd.concat(out).sort_values(cols[:3], ignore_index=True)
+
+
+def test_advect_blend_series_is_four_jobs(spark):
+    """Frames pair through one broadcast successor dimension: a
+    3-frame series blends in at most 4 Spark jobs."""
+    from rainforest_spark.grid.advection import advect_blend_series
+
+    grids = spark.createDataFrame(_series([1000, 1300, 1600])) \
+        .localCheckpoint()
+    sc = spark.sparkContext
+    group = "advect-blend-series-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = advect_blend_series(grids, nx=40, ny=40,
+                                  max_shift=5).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert sorted(got["TIMESTAMP"].unique()) == [1300, 1600]
+
+
+@pytest.mark.parametrize("case", ["single", "unsorted_gapped", "null_ts"])
+def test_advect_blend_series_edge_cases(spark, case):
+    """One frame gives no rows; unsorted, gapped timestamps pair in
+    sorted order; rows with a null TIMESTAMP belong to no frame."""
+    from rainforest_spark.grid.advection import advect_blend_series
+
+    stamps = {"single": [1000], "null_ts": [1000, 1300, 1600],
+              "unsorted_gapped": [1900, 1000, 1300, 5000, 1600]}[case]
+    pdf = _series(stamps)
+    if case == "null_ts":
+        pdf.loc[::7, "TIMESTAMP"] = pd.NA
+    got = (advect_blend_series(spark.createDataFrame(pdf), nx=40, ny=40,
+                               max_shift=5).toPandas()
+           .sort_values(["TIMESTAMP", "x_idx", "y_idx"], ignore_index=True))
+    want = _blend_pairs(pdf)
+    assert len(got) == len(want)
+    if case == "single":
+        return
+    assert np.array_equal(got["TIMESTAMP"], want["TIMESTAMP"])
+    assert np.array_equal(got[["x_idx", "y_idx"]], want[["x_idx", "y_idx"]])
+    assert np.array_equal(got["rain_rate"], want["rain_rate"])
+
+
 def test_binary_grid_roundtrip(spark, tmp_path):
     """ELDES/RFQ headerless binary: DN plane (size = ny*nx) decodes via
     the scale, float32 plane reads raw (io_data.py:193-206 dispatch)."""

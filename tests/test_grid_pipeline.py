@@ -49,6 +49,51 @@ def test_lut_geometry(spark):
     assert h1[1] > h1[0] and (h5 > h1).all()
 
 
+def test_lut_is_materialised_numpy_geometry(spark, polar):
+    """The polar→Cartesian LUT is stored rows, not a plan literal: the
+    analysed plan of a job that joins it holds no LocalRelation, and its
+    rows are, bit for bit, the gates the numpy geometry maps inside the
+    grid."""
+    from rainforest_spark.grid.lookup import (
+        ELEVATIONS, NBINS_X, NBINS_Y, X0_KM, Y0_KM, beam_height,
+        ground_distance, polar_to_cart_lut,
+    )
+    from rainforest_spark.grid.qpe import apply_polar_masks, polar_to_grid
+
+    radars = {k: RADAR_XYZ[k] for k in ("A", "D")}
+    sweeps, n_az, n_rng, res = [1, 3], 90, 40, 500.0
+    lut = polar_to_cart_lut(spark, radars, sweeps=sweeps, n_az=n_az,
+                            n_rng=n_rng, rng_res_m=res)
+    grid = polar_to_grid(apply_polar_masks(polar.localCheckpoint()), lut,
+                         ["zh_lin"])
+    assert "LocalRelation" not in \
+        grid._jdf.queryExecution().analyzed().toString()
+
+    rng_m = (np.arange(n_rng) + 0.5) * res
+    want = []
+    for radar, (rx, ry, rz) in radars.items():
+        for sweep in sweeps:
+            gd = ground_distance(rng_m, ELEVATIONS[sweep - 1])
+            h = beam_height(rng_m, ELEVATIONS[sweep - 1], rz)
+            for az in range(n_az):
+                x_idx = np.floor((rx + np.sin(np.deg2rad(az)) * gd)
+                                 / 1000.0 - X0_KM).astype(np.int32)
+                y_idx = np.floor((ry + np.cos(np.deg2rad(az)) * gd)
+                                 / 1000.0 - Y0_KM).astype(np.int32)
+                inside = ((x_idx >= 0) & (x_idx < NBINS_X)
+                          & (y_idx >= 0) & (y_idx < NBINS_Y))
+                want.append(pd.DataFrame({
+                    "RADAR": radar, "SWEEP": np.int32(sweep),
+                    "az_idx": np.int32(az),
+                    "rng_idx": np.arange(n_rng, dtype=np.int32)[inside],
+                    "x_idx": x_idx[inside], "y_idx": y_idx[inside],
+                    "height": h[inside].astype(np.float32)}))
+    want = pd.concat(want, ignore_index=True)
+    key = ["RADAR", "SWEEP", "az_idx", "rng_idx"]
+    got = lut.toPandas().sort_values(key, ignore_index=True)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
 def test_masks_and_scatter_add(spark, polar):
     from rainforest_spark.grid.lookup import polar_to_cart_lut
     from rainforest_spark.grid.qpe import apply_polar_masks, polar_to_grid
