@@ -13,7 +13,12 @@ polar→Cartesian LUT is materialised once when it is built
 (``localCheckpoint``), so the plans that join it scan stored rows; a
 ``createDataFrame`` literal (a ``LocalRelation`` of up to 3.6M rows)
 would be analysed, planned and scanned again by every job that joins
-it.  The station→pixel LUT (at most 9 rows per gauge) stays a literal.
+it.  The stored rows live in this session's executors' block managers
+only and the lineage is cut: an executor lost (or removed by dynamic
+allocation) takes its blocks with it, and every later job that joins
+the LUT fails; build the LUT again then.  In ``local`` mode the driver
+is the only executor, so its LUT lives as long as the session.  The
+station→pixel LUT (at most 9 rows per gauge) stays a literal.
 
 Reference grid (common/constants.py:112-126): easting (the reference's
 Y_QPE) 255..965 km → 710 bins; northing (the reference's X_QPE)
@@ -72,6 +77,12 @@ def polar_to_cart_lut(spark: SparkSession, radars_xyz: dict[str, tuple],
     qpegrid_to_rad) and indexes numpy arrays with it; here it becomes a
     broadcastable dimension table for the J7 equi-join, materialised
     here (one Spark job) so no plan that joins it carries its rows.
+
+    The result is ``localCheckpoint``ed: its rows live on this session's
+    executors only and cannot be recomputed.  If an executor that holds
+    them is lost, jobs that join the LUT fail; call this again for a new
+    LUT.  A ``local`` master, where the driver is the executor, is not
+    affected.
     """
     sweeps = sweeps or list(range(1, len(ELEVATIONS) + 1))
     frames = []

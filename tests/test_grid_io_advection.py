@@ -148,7 +148,8 @@ def test_advect_blend_series_distributed(spark):
 
 
 def _bilinear(frame, dy, dx):
-    """The semi-Lagrangian bilinear resample, written out in full."""
+    """The semi-Lagrangian bilinear resample, written out in full: the
+    reference that a whole-pixel ``advect`` must equal."""
     ny, nx = frame.shape
     yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
     sy, sx = yy - dy, xx - dx
@@ -167,7 +168,8 @@ def _bilinear(frame, dy, dx):
 
 def test_advect_whole_pixel_shift_equals_bilinear():
     """A whole-pixel shift (negative, zero, beyond the frame, int or
-    integral float) gives exactly the bilinear formula's values."""
+    integral float) gives exactly the bilinear formula's values; a
+    fractional one raises."""
     from rainforest_spark.grid.advection import advect
 
     rng = np.random.RandomState(31)
@@ -186,21 +188,8 @@ def test_advect_whole_pixel_shift_equals_bilinear():
     f32 = rng.uniform(0, 10, (9, 11)).astype(np.float32)
     assert np.array_equal(advect(f32, -3, 4), _bilinear(f32, -3, 4),
                           equal_nan=True)
-
-
-def test_advect_fractional_shift_interpolates():
-    from rainforest_spark.grid.advection import advect
-
-    ramp = np.tile(np.arange(8, dtype=np.float64)[:, None], (1, 5))
-    out = advect(ramp, 0.5, 0.0)
-    assert np.isnan(out[0]).all()
-    assert np.allclose(out[1:], ramp[1:] - 0.5)
-    rng = np.random.RandomState(37)
-    f = rng.uniform(0, 10, (12, 15))
-    f[3, 4] = np.nan
-    for dy, dx in [(0.25, -1.5), (-2.75, 3.1), (1, 0.5)]:
-        assert np.array_equal(advect(f, dy, dx), _bilinear(f, dy, dx),
-                              equal_nan=True)
+    with pytest.raises(ValueError, match="whole pixels"):
+        advect(f32, 0.5, 0)
 
 
 def _series(stamps, n=40):
